@@ -6,7 +6,7 @@ re-expressed Spark-first:
 
 - :mod:`sparksketch.bloom` — the centerpiece: a hybrid dynamically-scalable
   cascading multidimensional Bloom filter as a *mergeable byte-array sketch*
-  built with vectorized Arrow UDFs + ``treeReduce`` OR-merge.
+  built with vectorized Arrow UDFs and OR-merged by one linear driver fold.
 - :mod:`sparksketch.hll`, :mod:`sparksketch.cms`, :mod:`sparksketch.tdigest`,
   :mod:`sparksketch.kll` — the same mergeable partial/final pattern for
   distinct-count, frequency, and quantiles.

@@ -34,9 +34,10 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
   The shuffle carries only two int64 base hashes per row (16 B) — shard id
   and per-tier KM pairs are derived in-kernel via splitmix64 — never the
   key text; at 100 TB input the shuffle is ~GBs.
-- **Merge** — ``treeReduce`` OR-merges per-shard byte blobs in log depth.
-  Disjoint shards concatenate; same-shard same-level bitsets OR and their
-  key counts add.  A merged level whose fill exceeds capacity is flagged
+- **Merge** — one in-place fold, :meth:`BloomFilterState.merge`: the driver
+  collects the per-shard byte blobs once, parses each once and merges it in
+  linearly.  Disjoint shards concatenate; same-shard same-level bitsets OR
+  and their key counts add.  A merged level whose fill exceeds capacity is flagged
   (``overflowed``) — compaction = re-aggregating the source table, which is
   the distributed replacement for the reference's per-shard WAL
   (filter.rs:347-371, 490-524): the immutable input table *is* the key log.
@@ -83,6 +84,41 @@ from sparksketch.hashing import (
 _MAGIC = b"SKBF"
 _VERSION = 2        # flags byte == 0 (the original pad byte)
 _VERSION_FLAGS = 3  # same layout, nonzero flags byte (bit 0 = strict_parity)
+# plain format strings, not struct.Struct objects: UDFs pickle
+# BloomFilterState.from_bytes by value, and a Struct does not pickle
+# magic, version, tiers, rehash, flags, n_shards, n_entries, threshold, m0
+_HEADER = "<4sBBBBIIdQ"
+_HEADER_SIZE = struct.calcsize(_HEADER)
+_LEVEL = "<IQHQ"  # idx, m, k, n; then m // 8 bytes of bits
+_LEVEL_SIZE = struct.calcsize(_LEVEL)
+
+
+def _parse_header(data: bytes) -> tuple[int, int, int, float, bool, bool, int]:
+    """Validated blob header → (tiers, n_shards, n_entries, threshold,
+    rehash, strict, m0).  The one header parser: :meth:`BloomFilterState.from_bytes`
+    and :func:`blob_geometry` both read through it."""
+    if data[:4] != _MAGIC:
+        raise ValueError("not a sparksketch bloom blob")
+    if len(data) < _HEADER_SIZE:
+        raise ValueError("truncated sparksketch bloom blob")
+    (_, ver, tiers, rehash, flags, n_shards, n_entries, threshold,
+     m0) = struct.unpack_from(_HEADER, data)
+    if ver not in (_VERSION, _VERSION_FLAGS):
+        raise ValueError(f"unsupported blob version {ver}")
+    if ver == _VERSION and flags:
+        raise ValueError("v2 blob with nonzero flags byte (corrupt or "
+                         "written by a skewed writer) — refusing to guess")
+    if flags & ~1:
+        raise ValueError(f"unknown blob flag bits 0x{flags & ~1:x} — "
+                         "written by a newer sparksketch; refusing to "
+                         "probe with incompatible routing")
+    if not (tiers >= 1 and rehash <= 1 and n_shards >= 1 and n_entries <= n_shards
+            and m0 >= 64 and m0 & (m0 - 1) == 0
+            and math.isfinite(threshold) and threshold > 0):
+        raise ValueError(f"corrupt sparksketch bloom blob header: tiers={tiers} "
+                         f"rehash={rehash} n_shards={n_shards} entries={n_entries} "
+                         f"m0={m0} threshold={threshold}")
+    return tiers, n_shards, n_entries, threshold, bool(rehash), bool(flags & 1), m0
 
 
 @dataclass
@@ -99,11 +135,17 @@ class Level:
     n: int
     bits: np.ndarray  # uint64[m // 64]
 
+    @staticmethod
+    def geometry(idx: int, m0: int, threshold: float) -> tuple[int, int]:
+        """(m, k) of level ``idx``: the one definition shared by level
+        opening and blob validation."""
+        m = m0 << idx
+        return m, optimal_k(m, expected_n(m, threshold))
+
     @classmethod
     def fresh(cls, idx: int, m0: int, threshold: float) -> "Level":
-        m = m0 << idx
-        return cls(idx=idx, m=m, k=optimal_k(m, expected_n(m, threshold)), n=0,
-                   bits=np.zeros(m // 64, dtype=np.uint64))
+        m, k = cls.geometry(idx, m0, threshold)
+        return cls(idx=idx, m=m, k=k, n=0, bits=np.zeros(m // 64, dtype=np.uint64))
 
     def capacity(self, threshold: float) -> int:
         return expected_n(self.m, threshold)
@@ -116,20 +158,6 @@ class Level:
 
     def copy(self) -> "Level":
         return Level(self.idx, self.m, self.k, self.n, self.bits.copy())
-
-
-def _merge_levels(a: list[Level], b: list[Level]) -> list[Level]:
-    """OR same-index levels, keep extras. Associative + commutative."""
-    out: dict[int, Level] = {lv.idx: lv.copy() for lv in a}
-    for lv in b:
-        if lv.idx in out:
-            tgt = out[lv.idx]
-            assert tgt.m == lv.m and tgt.k == lv.k, "geometry mismatch"
-            tgt.bits |= lv.bits
-            tgt.n += lv.n
-        else:
-            out[lv.idx] = lv.copy()
-    return [out[i] for i in sorted(out)]
 
 
 @dataclass
@@ -160,101 +188,92 @@ class BloomFilterState:
 
     def to_bytes(self) -> bytes:
         buf = io.BytesIO()
-        buf.write(_MAGIC)
         # the flags byte occupies what was the V2 pad byte; blobs with any
         # flag set are stamped V3 so a pre-flags reader REJECTS them instead
         # of silently decoding strict=False and probing with default routing
         # (a zero-FN contract break under reader/writer version skew)
         flags = int(self.strict)
         ver = _VERSION_FLAGS if flags else _VERSION
-        buf.write(struct.pack("<BBBBIId", ver, self.tiers, int(self.rehash),
-                              flags, self.n_shards, len(self.shards),
-                              self.threshold))
-        buf.write(struct.pack("<Q", self.m0))
+        buf.write(struct.pack(_HEADER, _MAGIC, ver, self.tiers, int(self.rehash), flags,
+                               self.n_shards, len(self.shards), self.threshold, self.m0))
         for sid in sorted(self.shards):
             buf.write(struct.pack("<I", sid))
             for tier_levels in self.shards[sid]:
                 buf.write(struct.pack("<H", len(tier_levels)))
                 for lv in tier_levels:
-                    buf.write(struct.pack("<IQHQ", lv.idx, lv.m, lv.k, lv.n))
+                    buf.write(struct.pack(_LEVEL, lv.idx, lv.m, lv.k, lv.n))
                     buf.write(lv.bits.tobytes())
         return buf.getvalue()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilterState":
-        if data[:4] != _MAGIC:
-            raise ValueError("not a sparksketch bloom blob")
-        off = 4
-        ver, tiers, rehash, flags, n_shards, n_entries, threshold = struct.unpack_from("<BBBBIId", data, off)
-        off += struct.calcsize("<BBBBIId")
-        if ver not in (_VERSION, _VERSION_FLAGS):
-            raise ValueError(f"unsupported blob version {ver}")
-        if ver == _VERSION and flags:
-            raise ValueError("v2 blob with nonzero flags byte (corrupt or "
-                             "written by a skewed writer) — refusing to guess")
-        if flags & ~1:
-            raise ValueError(f"unknown blob flag bits 0x{flags & ~1:x} — "
-                             "written by a newer sparksketch; refusing to "
-                             "probe with incompatible routing")
-        (m0,) = struct.unpack_from("<Q", data, off)
-        off += 8
+        """Decode and validate a blob: every malformed blob (truncated,
+        trailing bytes, a tier with no levels, a level whose (m, k) is not
+        its index's geometry, level indices not increasing within a tier,
+        shard ids out of range or not increasing) raises ``ValueError`` instead of decoding into a
+        filter that probes differently."""
+        tiers, n_shards, n_entries, threshold, rehash, strict, m0 = _parse_header(data)
         st = cls(tiers=tiers, n_shards=n_shards, m0=m0, threshold=threshold,
-                 rehash=bool(rehash), strict=bool(flags & 1))
-        for _ in range(n_entries):
-            (sid,) = struct.unpack_from("<I", data, off)
-            off += 4
-            tiers_levels = []
-            for _t in range(tiers):
-                (n_levels,) = struct.unpack_from("<H", data, off)
-                off += 2
-                levels = []
-                for _l in range(n_levels):
-                    idx, m, k, n = struct.unpack_from("<IQHQ", data, off)
-                    off += struct.calcsize("<IQHQ")
-                    nbytes = m // 8
-                    if off + nbytes > len(data):
-                        raise ValueError("truncated sparksketch bloom blob")
-                    bits = np.frombuffer(data[off : off + nbytes], dtype=np.uint64).copy()
-                    off += nbytes
-                    levels.append(Level(idx, m, k, n, bits))
-                tiers_levels.append(levels)
-            st.shards[sid] = tiers_levels
+                 rehash=rehash, strict=strict)
+        geometry: dict[int, tuple[int, int]] = {}
+        off, prev_sid = _HEADER_SIZE, -1
+        try:
+            for _ in range(n_entries):
+                (sid,) = struct.unpack_from("<I", data, off)
+                off += 4
+                if not prev_sid < sid < n_shards:
+                    raise ValueError(f"shard id {sid} out of order or >= n_shards={n_shards}")
+                prev_sid = sid
+                tiers_levels = []
+                for t in range(tiers):
+                    (n_levels,) = struct.unpack_from("<H", data, off)
+                    off += 2
+                    if n_levels == 0:  # no writer emits one; it would probe every key absent
+                        raise ValueError(f"shard {sid} tier {t} has no levels")
+                    levels: list[Level] = []
+                    for _l in range(n_levels):
+                        idx, m, k, n = struct.unpack_from(_LEVEL, data, off)
+                        off += _LEVEL_SIZE
+                        if levels and idx <= levels[-1].idx:
+                            raise ValueError(f"shard {sid} tier {t}: level indices not increasing")
+                        want = geometry.get(idx)
+                        if want is None and idx < 64:  # m is a u64 field
+                            want = geometry[idx] = Level.geometry(idx, m0, threshold)
+                        if (m, k) != want:
+                            raise ValueError(f"shard {sid} tier {t} level {idx}: (m, k) = "
+                                             f"({m}, {k}), geometry says {want}")
+                        if off + m // 8 > len(data):
+                            raise ValueError("truncated sparksketch bloom blob")
+                        bits = np.frombuffer(data, np.uint64, m // 64, off).copy()
+                        off += m // 8
+                        levels.append(Level(idx, m, k, n, bits))
+                    tiers_levels.append(levels)
+                st.shards[sid] = tiers_levels
+        except struct.error as e:
+            raise ValueError("truncated sparksketch bloom blob") from e
+        if off != len(data):
+            raise ValueError(f"{len(data) - off} trailing bytes after a sparksketch bloom blob")
         return st
 
     # ---------------- merge (associative + commutative) ----------------
 
     def merge(self, other: "BloomFilterState") -> "BloomFilterState":
+        """OR-merge ``other`` into self in place and return self, like every
+        other sketch's ``merge``.  O(|other|), so a linear fold over P
+        partials costs O(total size).  The donor is never aliased: adopted
+        shards and levels are copied, so a later merge cannot OR into it.
+        A geometry mismatch raises ``ValueError``; a filter-level mismatch
+        is caught before anything changes, a level-level one (possible only
+        for hand-built states, as decoded levels are validated) may leave
+        self partly merged."""
         if (self.tiers, self.n_shards, self.m0, self.threshold, self.strict) != (
             other.tiers, other.n_shards, other.m0, other.threshold, other.strict
         ):
             raise ValueError("cannot merge filters with different geometry")
-        out = BloomFilterState(self.tiers, self.n_shards, self.m0, self.threshold,
-                               self.rehash, strict=self.strict)
-        for sid in set(self.shards) | set(other.shards):
-            a = self.shards.get(sid)
-            b = other.shards.get(sid)
-            if a is None:
-                out.shards[sid] = [[lv.copy() for lv in t] for t in b]
-            elif b is None:
-                out.shards[sid] = [[lv.copy() for lv in t] for t in a]
-            else:
-                out.shards[sid] = [_merge_levels(a[t], b[t]) for t in range(self.tiers)]
-        return out
-
-    def merge_into(self, other: "BloomFilterState") -> "BloomFilterState":
-        """In-place OR-merge of ``other`` into self — O(|other|) instead of
-        O(|self| + |other|); the right fold primitive for collect-and-merge
-        (a copying fold over P partials is quadratic in filter size)."""
-        if (self.tiers, self.n_shards, self.m0, self.threshold, self.strict) != (
-            other.tiers, other.n_shards, other.m0, other.threshold, other.strict
-        ):
-            raise ValueError("cannot merge filters with different geometry")
+        self._stacked = None  # bitsets change below: invalidate the probe index
         for sid, cascade in other.shards.items():
             mine = self.shards.get(sid)
             if mine is None:
-                # copy on adopt (one copy per NEW shard over the whole fold):
-                # aliasing other's arrays would let later merges OR into the
-                # donor's bits in place, silently corrupting a reused `other`
                 self.shards[sid] = [[lv.copy() for lv in t] for t in cascade]
                 continue
             for t in range(self.tiers):
@@ -262,15 +281,14 @@ class BloomFilterState:
                 for lv in cascade[t]:
                     tgt = levels.get(lv.idx)
                     if tgt is None:
-                        # copy, like the shard-adopt branch: appending the
-                        # donor's Level object by reference would let a later
-                        # merge OR into the donor's own bits in place
                         mine[t].append(lv.copy())
+                    elif (tgt.m, tgt.k) != (lv.m, lv.k):
+                        raise ValueError(f"shard {sid} tier {t} level {lv.idx}: "
+                                         "cannot merge levels with different geometry")
                     else:
                         tgt.bits |= lv.bits
                         tgt.n += lv.n
                 mine[t].sort(key=lambda l: l.idx)
-        self._stacked = None  # bitsets mutated: invalidate the probe index
         return self
 
     # ---------------- queries ----------------
@@ -794,49 +812,30 @@ def build_bloom(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig(),
                 n_shards: int | None = None, partitions: int | None = None,
                 expected_keys: int | None = None, checkpoint_dir: str | None = None,
                 input_id: str = "", enforce_key_limit: bool = True, route: bool = True,
-                merge: str = "auto", tree_depth: int | None = None) -> BloomFilterState:
+                merge: str = "auto") -> BloomFilterState:
     """Build and OR-merge into a single driver-side filter.
 
-    ``merge='driver'`` collects the per-shard blobs once and folds them on
-    the driver — one Spark job total; right whenever the filter fits in
-    driver memory.  ``merge='tree'`` is the log-depth distributed
-    ``treeReduce`` for filters too large to fold in one process (the
-    executors OR blobs pairwise; the driver only sees the final one) — at
-    that size also consider never collecting at all
-    (:func:`build_bloom_states` + :func:`membership_join`).
-    ``'auto'``: driver below 512 shards, tree above."""
+    The per-shard blobs are collected once (one Spark job) and folded
+    linearly on the driver, each parsed once and merged in place, so the
+    fold costs O(filter size) at any shard count.  Routed shards are
+    disjoint, so the fold mostly adopts shards; bits OR only where partials
+    overlap (``route=False``).  ``merge`` accepts ``"auto"`` and ``"driver"``,
+    which both mean this fold; any other value raises ``ValueError``.  For
+    a filter too big for driver memory, never collect it: use
+    :func:`build_bloom_states` + :func:`membership_join`."""
+    if merge not in ("auto", "driver"):
+        raise ValueError(f"merge={merge!r}: build_bloom has one merge, the driver fold "
+                         "('auto' or 'driver')")
     states, info = build_bloom_states(df, col, cfg, n_shards, partitions, expected_keys,
                                       checkpoint_dir, input_id, enforce_key_limit, route)
-    if merge == "auto":
-        merge = "driver" if info["n_shards"] <= 512 else "tree"
-    if merge == "driver":
-        blobs = [bytes(r[0]) for r in states.select("state").collect()]
-        if not blobs:
-            return BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
-        acc = BloomFilterState.from_bytes(blobs[0])
-        for b in blobs[1:]:
-            acc.merge_into(BloomFilterState.from_bytes(b))
-        return acc
-    rdd = states.select("state").rdd.map(lambda r: bytes(r[0]))
-    parts = info["partitions"]
-    depth = tree_depth or max(2, int(math.ceil(math.log2(max(parts, 2)))))
-    # treeAggregate with an empty-blob zero avoids a separate isEmpty() job
-    # (which would re-run the whole build pipeline)
-    merged = rdd.treeAggregate(b"", _merge_or_adopt, _merge_or_adopt, depth=min(depth, 5))
-    if merged == b"":
-        return BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
-    return BloomFilterState.from_bytes(merged)
-
-
-def _merge_or_adopt(a: bytes, b: bytes) -> bytes:
-    if a == b"":
-        return b
-    if b == b"":
-        return a
-    return merge_blobs(a, b)
+    acc = BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
+    for row in states.select("state").collect():
+        acc.merge(BloomFilterState.from_bytes(row[0]))
+    return acc
 
 
 def merge_blobs(a: bytes, b: bytes) -> bytes:
+    """Parse both blobs, :meth:`~BloomFilterState.merge`, serialise."""
     return BloomFilterState.from_bytes(a).merge(BloomFilterState.from_bytes(b)).to_bytes()
 
 
@@ -969,10 +968,10 @@ def with_group_membership(df: DataFrame, group_col: str, col: str, states,
 
 
 def blob_geometry(blob: bytes) -> tuple[int, int, bool]:
-    """(tiers, n_shards, strict) from a state blob header — lets consumers
-    of a persisted filter table avoid hard-coding geometry."""
-    ver, tiers, rehash, flags, n_shards, _n, _thr = struct.unpack_from("<BBBBIId", blob, 4)
-    return tiers, n_shards, bool(flags & 1)
+    """(tiers, n_shards, strict) from a validated state blob header — lets
+    consumers of a persisted filter table avoid hard-coding geometry."""
+    tiers, n_shards, _n, _thr, _rehash, strict, _m0 = _parse_header(blob)
+    return tiers, n_shards, strict
 
 
 def membership_join(probes: DataFrame, col: str, states: DataFrame,
@@ -1117,11 +1116,14 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
 
 
 def _merge_state_rows(pdf):
+    """One shard's state rows → one row: each blob parsed once, folded in
+    place, serialised once."""
     import pandas as pd
-    blob = None
+    acc = None
     for b in pdf["state"]:
-        blob = bytes(b) if blob is None else merge_blobs(blob, bytes(b))
-    return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "state": [blob]})
+        st = BloomFilterState.from_bytes(bytes(b))
+        acc = st if acc is None else acc.merge(st)
+    return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "state": [acc.to_bytes()]})
 
 
 # ====================================================================
@@ -1157,7 +1159,7 @@ class GroupBloom:
                       self.state.threshold, self.state.rehash, self.cap_div)
 
     def merge(self, other: "GroupBloom") -> "GroupBloom":
-        self.state.merge_into(other.state)
+        self.state.merge(other.state)
         return self
 
     def to_bytes(self) -> bytes:

@@ -130,19 +130,6 @@ def rank_key_sql(key_col: str, salt: str) -> str:
     return f"md5('{salt}|' || coalesce(CAST({key_col} AS VARCHAR), ''))"
 
 
-def tier_hash_cols(col: str | Column, tiers: int) -> list[Column]:
-    """The (h1, h2) Kirsch–Mitzenmacher base-hash columns for each tier,
-    aliased ``_skh_{t}a`` / ``_skh_{t}b``.  Computed pre-shuffle in the JVM
-    (whole-stage codegen), consumed as int64 by the numpy kernels."""
-    cols = []
-    for t in range(tiers):
-        s1 = HASH_SEED_SELECTION[2 + 2 * t]
-        s2 = HASH_SEED_SELECTION[3 + 2 * t]
-        cols.append(hash_col(col, s1).alias(f"_skh_{t}a"))
-        cols.append(hash_col(col, s2).alias(f"_skh_{t}b"))
-    return cols
-
-
 def derive_tier_hashes(h1: np.ndarray, h2: np.ndarray, tiers: int) -> list[tuple[np.ndarray, np.ndarray]]:
     """Derive per-tier (h1_t, h2_t) base-hash pairs from the two shipped
     base hashes: ``splitmix64(h ^ tier_seed)``.

@@ -16,9 +16,11 @@ from sparksketch.bloom import (
     BloomFilterState,
     build_bloom,
     build_bloom_states,
+    hash_probe_cols,
     membership_join,
     merge_blobs,
     resolve_m0,
+    route_expr,
     with_membership,
 )
 from sparksketch.config import Accuracy, BloomConfig, InitialCapacity, Throughput, expected_n, optimal_k
@@ -153,6 +155,68 @@ def test_merge_rejects_geometry_mismatch(spark):
     b = build_bloom(_keys_df(spark, 0, 100), "key", BloomConfig(accuracy=Accuracy.HIGH), n_shards=8, partitions=2)
     with pytest.raises(ValueError):
         a.merge(b)
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_merge_law_default_shards_multi_level(spark, strict):
+    """The merge laws at the default 4096 shards with multi-level
+    shard-tiers: the build's fold equals a shuffled-order fold of the
+    per-shard blobs, and merge='driver' is the same fold."""
+    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
+                      strict_parity=strict)
+    assert cfg.shards == 4096 and expected_n(cfg.m0, cfg.threshold) == 107
+    # keys over every shard, plus ~240 keys in each of shards 0..7 (by the
+    # build's own routing hash): past level 0's 107-key capacity
+    hot = (_keys_df(spark, 20_000, 1_000_000).select("key", *hash_probe_cols("key"))
+           .where(route_expr(cfg.shards) < 8).select("key"))
+    df = _keys_df(spark, 0, 20_000).union(hot).cache()
+    state = build_bloom(df, "key", cfg, partitions=4)
+    assert max(len(t) for c in state.shards.values() for t in c) >= 2
+    assert with_membership(df, "key", state).filter(~F.col("is_member")).count() == 0
+    blob = state.to_bytes()
+
+    states, _ = build_bloom_states(df, "key", cfg, partitions=4)
+    blobs = [bytes(r.state) for r in states.collect()]
+    rng = random.Random(7)
+    for _ in range(2):
+        rng.shuffle(blobs)
+        acc = BloomFilterState.from_bytes(blobs[0])
+        for b in blobs[1:]:
+            acc.merge(BloomFilterState.from_bytes(b))
+        assert acc.to_bytes() == blob
+
+    assert build_bloom(df, "key", cfg, partitions=4, merge="driver").to_bytes() == blob
+    with pytest.raises(ValueError):
+        build_bloom(df, "key", cfg, partitions=4, merge="tree")
+    df.unpersist()
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_membership_join_merges_partial_state_rows(spark, strict):
+    """A states table with two rows per shard (two builds over disjoint key
+    ranges) probes exactly like the driver-merged filter, for inserted and
+    absent keys alike."""
+    cfg = BloomConfig(strict_parity=strict)
+    sa, _ = build_bloom_states(_keys_df(spark, 0, 3000), "key", cfg, n_shards=16, partitions=4)
+    sb, _ = build_bloom_states(_keys_df(spark, 3000, 6000), "key", cfg, n_shards=16, partitions=4)
+    union = sa.union(sb).cache()
+    rows = union.collect()
+    assert len(rows) > len({r.shard for r in rows})  # several rows per shard
+
+    def fold(states):
+        acc = BloomFilterState.empty(cfg, 16)
+        for r in states.collect():
+            acc.merge(BloomFilterState.from_bytes(r.state))
+        return acc
+
+    merged = fold(sa).merge(fold(sb))
+    probes = _keys_df(spark, 0, 9000)  # 0..5999 inserted, 6000..8999 absent
+    via_join = {r.key: r.is_member for r in membership_join(probes, "key", union).collect()}
+    via_bc = {r.key: r.is_member for r in with_membership(probes, "key", merged).collect()}
+    assert len(via_join) == 9000
+    assert via_join == via_bc
+    assert all(via_join[str(k)] for k in range(6000))
+    union.unpersist()
 
 
 # ---------------- cascade growth / rehash semantics ----------------

@@ -106,8 +106,8 @@ def test_merge_into_adopt_does_not_alias_donor(spark):
         "key", BloomConfig(), n_shards=4, partitions=2)
     donor_bytes = b.to_bytes()
     acc = BloomFilterState.empty(BloomConfig(), 4, a.m0)
-    acc.merge_into(b)   # adopts b's shards (acc was empty)
-    acc.merge_into(a)   # ORs a into the adopted arrays
+    acc.merge(b)   # adopts b's shards (acc was empty)
+    acc.merge(a)   # ORs a into the adopted arrays
     assert b.to_bytes() == donor_bytes  # donor untouched
     assert not b.contains("0") and b.contains("1000")
 
@@ -158,10 +158,10 @@ def test_merge_into_never_aliases_donor_levels(spark):
         "key", cfg, n_shards=2, partitions=2)
     assert max(len(t) for c in donor.shards.values() for t in c) >= 2
     donor_bytes = donor.to_bytes()
-    acc.merge_into(donor)  # appends donor's deeper levels into acc's shards
+    acc.merge(donor)  # appends donor's deeper levels into acc's shards
     extra = build_bloom(
         spark.range(20_000, 23_000).select(F.col("id").cast("string").alias("key")),
         "key", cfg, n_shards=2, partitions=2)
-    acc.merge_into(extra)  # ORs into the appended level objects
+    acc.merge(extra)  # ORs into the appended level objects
     assert donor.to_bytes() == donor_bytes  # donor untouched
     assert not donor.contains("20005")

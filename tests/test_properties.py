@@ -2,14 +2,17 @@
 hash parity, geometry — no SparkSession needed, so they run fast and explore
 corners the example tests don't."""
 
+import struct
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparksketch.bloom import BloomFilterState, Level, _insert_batch
+from sparksketch.bloom import BloomFilterState, Level, _insert_batch, blob_geometry
 from sparksketch.cms import CMS
 from sparksketch.config import BloomConfig, expected_n, optimal_k
-from sparksketch.hashing import km_indices, set_bits, spark_xxhash64, xxh64
+from sparksketch.hashing import derive_shard, derive_tier_hashes, km_indices, set_bits, spark_xxhash64, xxh64
 from sparksketch.hashing import test_bits as check_bits
 from sparksketch.hll import HLL
 from sparksketch.tdigest import TDigest
@@ -89,13 +92,137 @@ def test_bloom_merge_order_invariance(keys, n_parts, rnd):
     def fold(order):
         acc = BloomFilterState.from_bytes(states[order[0]].to_bytes())
         for i in order[1:]:
-            acc.merge_into(BloomFilterState.from_bytes(states[i].to_bytes()))
+            acc.merge(BloomFilterState.from_bytes(states[i].to_bytes()))
         return acc.to_bytes()
 
     base = fold(list(range(n_parts)))
     order = list(range(n_parts))
     rnd.shuffle(order)
     assert fold(order) == base
+
+
+# ---------------- bloom blob decoding ----------------
+
+def _cascade_state(n_keys: int, n_shards: int, strict: bool, seed: int) -> BloomFilterState:
+    """A multi-shard filter with tiny levels (m0=64: 4 keys per level 0), so
+    a few dozen keys per shard open several levels."""
+    cfg = BloomConfig()
+    st_ = BloomFilterState(cfg.tiers, n_shards, 64, cfg.threshold, cfg.rehash, strict=strict)
+    rng = np.random.default_rng(seed)
+    h1 = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, n_keys, dtype=np.int64)
+    h2 = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, n_keys, dtype=np.int64)
+    sids = derive_shard(h1, n_shards)
+    for sid in np.unique(sids):
+        rows = sids == sid
+        cascade = [[Level.fresh(0, 64, cfg.threshold)] for _ in range(cfg.tiers)]
+        _insert_batch(cascade, derive_tier_hashes(h1[rows], h2[rows], cfg.tiers),
+                      64, cfg.threshold, cfg.rehash)
+        st_.shards[int(sid)] = cascade
+    return st_
+
+
+def _blob_layout(state: BloomFilterState):
+    """Byte offsets in ``state.to_bytes()``: per shard (shard id offset,
+    [per tier (n_levels offset, end offset)]), and (offset, level) of every
+    level header."""
+    shards, levels, off = [], [], 32  # header: magic + <BBBBIId + m0
+    for sid in sorted(state.shards):
+        tiers, sid_off = [], off
+        off += 4
+        for tier in state.shards[sid]:
+            tier_off = off
+            off += 2
+            for lv in tier:
+                levels.append((off, lv))
+                off += 22 + lv.m // 8
+            tiers.append((tier_off, off))
+        shards.append((sid_off, tiers))
+    return shards, levels
+
+
+_blob_cases = st.tuples(st.integers(min_value=60, max_value=160), st.sampled_from([4, 8]),
+                        st.integers(min_value=0, max_value=2**32))
+
+
+@pytest.mark.parametrize("strict", [False, True])
+@given(_blob_cases)
+@settings(max_examples=8, deadline=None)
+def test_bloom_blob_every_truncation_raises(strict, case):
+    n_keys, n_shards, seed = case
+    state = _cascade_state(n_keys, n_shards, strict, seed)
+    assert len(state.shards) > 1
+    assert max(len(t) for c in state.shards.values() for t in c) >= 2
+    blob = state.to_bytes()
+    assert BloomFilterState.from_bytes(blob).to_bytes() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            BloomFilterState.from_bytes(blob[:cut])
+    with pytest.raises(ValueError):
+        BloomFilterState.from_bytes(blob + b"\0")
+
+
+@pytest.mark.parametrize("strict", [False, True])
+@given(_blob_cases, st.data())
+@settings(max_examples=30, deadline=None)
+def test_bloom_blob_level_header_bit_flip_raises(strict, case, data):
+    """A flipped bit in any level's (idx, m, k) fields never decodes."""
+    n_keys, n_shards, seed = case
+    state = _cascade_state(n_keys, n_shards, strict, seed)
+    blob = bytearray(state.to_bytes())
+    off, _ = data.draw(st.sampled_from(_blob_layout(state)[1]))
+    bit = data.draw(st.integers(min_value=0, max_value=14 * 8 - 1))  # idx u32, m u64, k u16
+    blob[off + bit // 8] ^= 1 << (bit % 8)
+    with pytest.raises(ValueError):
+        BloomFilterState.from_bytes(bytes(blob))
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_bloom_blob_corrupt_headers_raise(strict):
+    state = _cascade_state(120, 4, strict, 3)
+    blob = state.to_bytes()
+    shards, levels = _blob_layout(state)
+    deep, deep_lv = next((o, lv) for o, lv in levels if lv.idx > 0)
+    tier0, tier0_end = shards[0][1][0]
+
+    def patched(fmt, at, *vals):
+        b = bytearray(blob)
+        struct.pack_into(fmt, b, at, *vals)
+        return bytes(b)
+
+    bad = [
+        b"XKBF" + blob[4:],                                      # magic
+        patched("<B", 4, 9),                                     # version
+        patched("<B", 6, 2),                                     # rehash byte
+        patched("<I", 12, 5),                                    # entries > n_shards
+        patched("<d", 16, float("nan")),                         # threshold
+        patched("<Q", 24, 96),                                   # m0 not a power of two
+        patched("<Q", deep + 4, deep_lv.m // 2),                 # level m halved
+        patched("<H", deep + 12, 0),                             # level k = 0
+        patched("<I", deep, 0),                                  # level idx repeated
+        patched("<I", shards[-1][0], 4),                         # shard id >= n_shards
+        patched("<I", shards[1][0], min(state.shards)),          # shard ids not increasing
+        blob[:tier0] + b"\0\0" + blob[tier0_end:],               # a tier with no levels
+        blob + bytes(8),                                         # trailing bytes
+    ]
+    for b in bad:
+        with pytest.raises(ValueError):
+            BloomFilterState.from_bytes(b)
+        if b[:32] != blob[:32]:
+            with pytest.raises(ValueError):
+                blob_geometry(b)
+    assert blob_geometry(blob) == (2, 4, strict)
+
+
+def test_bloom_merge_rejects_level_geometry_mismatch():
+    """Same filter geometry, but one level's (m, k) differs: merge raises
+    ValueError (the assert it replaces vanished under ``python -O``)."""
+    a = _cascade_state(40, 4, False, 1)
+    b = _cascade_state(40, 4, False, 2)
+    sid = sorted(set(a.shards) & set(b.shards))[0]
+    lv = b.shards[sid][0][0]
+    b.shards[sid][0][0] = Level(lv.idx, lv.m, lv.k + 1, lv.n, lv.bits)
+    with pytest.raises(ValueError):
+        a.merge(b)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=0, max_size=500))
