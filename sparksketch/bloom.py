@@ -42,7 +42,12 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
   the distributed replacement for the reference's per-shard WAL
   (filter.rs:347-371, 490-524): the immutable input table *is* the key log.
 
-Query paths:
+Query paths — both probe through the one flat probe index
+(:meth:`BloomFilterState.contains_hashes`): a single uint64 words buffer
+holding every level's bits, plus per (tier, level index) an int64[n_shards]
+table of word offsets (-1 where a shard-tier lacks the level).  A probe is
+one gather per tier and level index, for uniform, mixed-depth and strict
+filters alike; ``from_bytes`` decodes straight into that buffer.
 
 - :func:`with_membership` — broadcast the (small) filter blob, probe with a
   vectorized pandas UDF over JVM-precomputed hash columns.
@@ -211,12 +216,17 @@ class BloomFilterState:
         trailing bytes, a tier with no levels, a level whose (m, k) is not
         its index's geometry, level indices not increasing within a tier,
         shard ids out of range or not increasing) raises ``ValueError`` instead of decoding into a
-        filter that probes differently."""
+        filter that probes differently.  The bits of every level are copied
+        into one words buffer, which is the probe index's (no second copy)."""
         tiers, n_shards, n_entries, threshold, rehash, strict, m0 = _parse_header(data)
         st = cls(tiers=tiers, n_shards=n_shards, m0=m0, threshold=threshold,
                  rehash=rehash, strict=strict)
         geometry: dict[int, tuple[int, int]] = {}
-        off, prev_sid = _HEADER_SIZE, -1
+        # the level bits are a subset of the blob, so they fit in len // 8 words
+        words = np.empty(len(data) // 8, dtype=np.uint64)
+        raw, src = memoryview(words).cast("B"), memoryview(data)
+        placed: list[tuple[int, int, int, int]] = []
+        used, off, prev_sid = 0, _HEADER_SIZE, -1
         try:
             for _ in range(n_entries):
                 (sid,) = struct.unpack_from("<I", data, off)
@@ -244,15 +254,18 @@ class BloomFilterState:
                                              f"({m}, {k}), geometry says {want}")
                         if off + m // 8 > len(data):
                             raise ValueError("truncated sparksketch bloom blob")
-                        bits = np.frombuffer(data, np.uint64, m // 64, off).copy()
+                        raw[used * 8:used * 8 + m // 8] = src[off:off + m // 8]
                         off += m // 8
-                        levels.append(Level(idx, m, k, n, bits))
+                        levels.append(Level(idx, m, k, n, words[used:used + m // 64]))
+                        placed.append((t, idx, sid, used))
+                        used += m // 64
                     tiers_levels.append(levels)
                 st.shards[sid] = tiers_levels
         except struct.error as e:
             raise ValueError("truncated sparksketch bloom blob") from e
         if off != len(data):
             raise ValueError(f"{len(data) - off} trailing bytes after a sparksketch bloom blob")
+        st._layout = words, placed
         return st
 
     # ---------------- merge (associative + commutative) ----------------
@@ -270,7 +283,7 @@ class BloomFilterState:
             other.tiers, other.n_shards, other.m0, other.threshold, other.strict
         ):
             raise ValueError("cannot merge filters with different geometry")
-        self._stacked = None  # bitsets change below: invalidate the probe index
+        self._layout = self._index = None  # shards and levels may be added below
         for sid, cascade in other.shards.items():
             mine = self.shards.get(sid)
             if mine is None:
@@ -306,123 +319,89 @@ class BloomFilterState:
         h1, h2 = self._base_hashes(key)
         return bool(self.contains_hashes(h1, h2)[0])
 
-    # cache for the stacked probe index (uniform-geometry fast path)
-    _stacked: dict | None = None
+    # the probe index (see _probe_index).  _layout is (words, placements):
+    # one uint64 buffer that every level's bits view, and (tier, level idx,
+    # shard, word offset) of each level in it; _index is built from it on
+    # the first probe.  Anything that adds shards or levels drops both.
+    _layout = None
+    _index = None
 
-    def _build_stacked(self) -> dict | None:
-        """When every shard-tier has the same level geometry (the common
-        case with an expected_keys hint), stack each level's bitsets into a
-        (n_shards, words) matrix so probes of ANY mix of shards become one
-        flat gather — no per-shard Python loop.  At the reference-default
-        4096 shards a 10k-row batch touches ~2400 shards; per-shard grouping
-        costs more than the bit tests themselves."""
-        sig = None
-        for cascade in self.shards.values():
-            s = tuple(tuple((lv.idx, lv.m, lv.k) for lv in tier) for tier in cascade)
-            if sig is None:
-                sig = s
-            elif s != sig:
-                return None
-        if sig is None:
-            return None
-        slot = np.full(self.n_shards, -1, dtype=np.int64)
-        sids = sorted(self.shards)
-        for i, sid in enumerate(sids):
-            slot[sid] = i
-        stacked = []  # per tier: list of (m, k, words, matrix)
-        for t in range(self.tiers):
-            levels = []
-            for li, (idx, m, k) in enumerate(sig[t]):
-                mat = np.stack([self.shards[sid][t][li].bits for sid in sids])
-                levels.append((m, k, m // 64, mat.reshape(-1)))
-            stacked.append(levels)
-        return {"slot": slot, "tiers": stacked}
+    def _pack(self) -> tuple[np.ndarray, list[tuple[int, int, int, int]]]:
+        """Copy every level's bits into one words buffer and rebind each
+        ``Level.bits`` to its view of it, so in-place writes to a level stay
+        visible to the probe.  Levels whose (m, k) is not their index's
+        geometry raise ``ValueError``: the probe takes (m, k) from it."""
+        levels = [(t, sid, lv) for sid, cascade in self.shards.items()
+                  for t, tier in enumerate(cascade) for lv in tier]
+        words = np.empty(sum(lv.m // 64 for _, _, lv in levels), dtype=np.uint64)
+        placed, off = [], 0
+        for t, sid, lv in levels:
+            if (lv.m, lv.k) != Level.geometry(lv.idx, self.m0, self.threshold):
+                raise ValueError(f"shard {sid} tier {t} level {lv.idx}: (m, k) is not its geometry")
+            n = lv.m // 64
+            words[off:off + n] = lv.bits
+            lv.bits = words[off:off + n]
+            placed.append((t, lv.idx, sid, off))
+            off += n
+        return words, placed
 
-    def _tier_stacked(self, cache, shard, t: int, h1, h2,
-                      active: np.ndarray | None = None) -> np.ndarray:
-        """Stacked flat-gather membership for ONE tier against a per-row
-        shard vector — rows whose shard is absent (or outside ``active``)
-        come back False."""
-        slot = cache["slot"][shard]
-        base_mask = slot >= 0
-        if active is not None:
-            base_mask = base_mask & active
-        tier_ok = np.zeros(shard.shape[0], dtype=bool)
-        for m, k, words, flat in cache["tiers"][t]:
-            pending = base_mask & ~tier_ok
-            if not pending.any():
-                break
-            rows = np.flatnonzero(pending)
-            idx = km_indices(h1[rows], h2[rows], k, m)
-            base = (slot[rows] * words).astype(np.uint64)[:, None]
-            got = (flat[(idx >> np.uint64(6)) + base] >> (idx & np.uint64(63))) & np.uint64(1)
-            tier_ok[rows] = got.all(axis=1)
-        return tier_ok
+    def _probe_index(self) -> tuple[np.ndarray, list[list[tuple[int, int, np.ndarray]]]]:
+        """(words, per tier [(m, k, offsets)] by level index): ``offsets`` is
+        an int64[n_shards] table of each shard-tier's word offset of that
+        level in ``words``, -1 where the shard-tier lacks the level."""
+        if self._index is None:
+            if self._layout is None:
+                self._layout = self._pack()
+            words, placed = self._layout
+            tables: list[dict[int, np.ndarray]] = [{} for _ in range(self.tiers)]
+            for t, idx, sid, off in placed:
+                offsets = tables[t].get(idx)
+                if offsets is None:
+                    offsets = tables[t][idx] = np.full(self.n_shards, -1, dtype=np.int64)
+                offsets[sid] = off
+            self._index = words, [
+                [(*Level.geometry(idx, self.m0, self.threshold), tables[t][idx])
+                 for idx in sorted(tables[t])]
+                for t in range(self.tiers)]
+        return self._index
 
-    def _tier_grouped(self, shard, t: int, h1, h2,
-                      active: np.ndarray | None = None) -> np.ndarray:
-        """Per-shard-grouped membership for ONE tier (mixed-geometry path)."""
-        n = shard.shape[0]
-        tier_ok = np.zeros(n, dtype=bool)
-        order = np.argsort(shard, kind="stable")
-        sorted_sid = shard[order]
-        starts = np.concatenate(([0], np.flatnonzero(np.diff(sorted_sid)) + 1, [n]))
-        for si in range(len(starts) - 1):
-            rows = order[starts[si] : starts[si + 1]]
-            if active is not None:
-                rows = rows[active[rows]]
-                if rows.size == 0:
-                    continue
-            cascade = self.shards.get(int(sorted_sid[starts[si]]))
-            if cascade is None:
-                continue
-            ok = np.zeros(rows.shape[0], dtype=bool)
-            for lv in cascade[t]:
-                pending = ~ok
-                if not pending.any():
-                    break
-                idx = km_indices(h1[rows][pending], h2[rows][pending], lv.k, lv.m)
-                ok[pending] = test_bits(lv.bits, idx)
-            tier_ok[rows] = ok
-        return tier_ok
+    def _probe_tier(self, t: int, shard: np.ndarray, h1: np.ndarray, h2: np.ndarray,
+                    active: np.ndarray) -> np.ndarray:
+        """Membership of each ``active`` row in tier ``t`` of its ``shard``
+        (OR over the tier's levels); inactive rows come back False.  One
+        flat gather per level index present, never a loop over shards, so
+        the cost per key does not depend on the geometry."""
+        words, tiers = self._probe_index()
+        ok = np.zeros(shard.shape[0], dtype=bool)
+        for m, k, offsets in tiers[t]:
+            base = offsets[shard]
+            rows = np.flatnonzero(active & ~ok & (base >= 0))
+            if rows.size:
+                bit_base = base[rows].astype(np.uint64) << np.uint64(6)
+                ok[rows] = test_bits(words, km_indices(h1[rows], h2[rows], k, m)
+                                     + bit_base[:, None])
+        return ok
 
     def contains_hashes(self, h1_i64: np.ndarray, h2_i64: np.ndarray) -> np.ndarray:
         """Vectorized membership over the two shipped base hashes (int64);
         shard routing and per-tier KM pairs are derived exactly as in the
-        build kernel.  Uniform-geometry filters use a stacked flat-gather
-        fast path; mixed geometry falls back to per-shard grouping (OR over
-        levels, AND over tiers either way).  Strict-parity filters AND over
-        *both* shards of each tier (p1 and the reference's
-        ``p2=(p1+mask/2)&mask``, filter.rs:120-137)."""
-        tier_hashes = derive_tier_hashes(h1_i64, h2_i64, self.tiers)
-        if self._stacked is None:
-            self._stacked = self._build_stacked() or {}
+        build kernel.  Every geometry (uniform, mixed level depths, strict)
+        takes the same flat gather over the probe index: OR over a tier's
+        levels, AND over tiers.  Strict-parity filters AND over *both*
+        shards of each tier (p1 and the reference's ``p2=(p1+mask/2)&mask``,
+        filter.rs:120-137)."""
         if self.strict:
             off = (self.n_shards - 1) // 2
-            routes = (derive_shard(h1_i64, self.n_shards),
-                      derive_shard(h2_i64, self.n_shards))
-            n = routes[0].shape[0]
-            result = np.ones(n, dtype=bool)
-            for t in range(self.tiers):
-                h1, h2 = tier_hashes[t]
-                s1 = routes[t]
-                for s in (s1, (s1 + off) % self.n_shards):
-                    if not result.any():
-                        return result
-                    if self._stacked:
-                        result &= self._tier_stacked(self._stacked, s, t, h1, h2, result)
-                    else:
-                        result &= self._tier_grouped(s, t, h1, h2, result)
-            return result
-        shard = derive_shard(h1_i64, self.n_shards)
-        result = None
-        for t in range(self.tiers):
-            h1, h2 = tier_hashes[t]
-            if self._stacked:
-                ok = self._tier_stacked(self._stacked, shard, t, h1, h2, result)
-            else:
-                ok = self._tier_grouped(shard, t, h1, h2, result)
-            result = ok if result is None else result & ok
+            routes = (derive_shard(h1_i64, self.n_shards), derive_shard(h2_i64, self.n_shards))
+            checks = [(t, s) for t in range(self.tiers)
+                      for s in (routes[t], (routes[t] + off) % self.n_shards)]
+        else:
+            shard = derive_shard(h1_i64, self.n_shards)
+            checks = [(t, shard) for t in range(self.tiers)]
+        tier_hashes = derive_tier_hashes(h1_i64, h2_i64, self.tiers)
+        result = np.ones(h1_i64.shape[0], dtype=bool)
+        for t, shard in checks:
+            result = self._probe_tier(t, shard, *tier_hashes[t], result)
             if not result.any():
                 break
         return result
@@ -864,9 +843,11 @@ def with_membership(df: DataFrame, col: str, state: BloomFilterState,
     positives ≤ the configured bound.
 
     Cost model: the first probe batch in each Python worker fetches the
-    broadcast blob and builds the stacked index (parse+stack is <1 s for a
-    128 MiB filter; the fetch dominates — measured ~60 s total for 128 MiB
-    × 32 local workers, then cached in the single worker slot).  For
+    broadcast blob and decodes it straight into the probe index, one words
+    buffer holding every level (the fetch dominates — measured ~60 s total
+    for 128 MiB × 32 local workers, then cached in the single worker slot).
+    Every batch is then one flat gather per tier and level index, at the
+    same cost per key for uniform, mixed-depth and strict filters.  For
     filters beyond ~100 MiB probed once, or too big for worker memory,
     prefer :func:`membership_join`, which never replicates the filter."""
     hcols = hash_probe_cols(F.col(col).cast("string"))
@@ -904,7 +885,15 @@ def _membership_probe_udf(spark, state: BloomFilterState):
     """The Bloom broadcast probe.  Membership is a pure function of
     (h1, h2) — callers that have already computed the hash columns (e.g.
     to dedup probes) can apply this directly without rehashing."""
-    return broadcast_probe_udf(spark, state.to_bytes(), BloomFilterState.from_bytes)
+    return broadcast_probe_udf(spark, state.to_bytes(), _decode_state)
+
+
+def _decode_state(blob: bytes) -> BloomFilterState:
+    """:meth:`BloomFilterState.from_bytes` as a module-level function: the
+    probe UDF's decoder.  cloudpickle ships a module function by reference,
+    whereas a bound classmethod goes by value, with every module global its
+    code reads (one unpicklable global would break every broadcast probe)."""
+    return BloomFilterState.from_bytes(blob)
 
 
 def with_group_membership(df: DataFrame, group_col: str, col: str, states,
@@ -1102,7 +1091,8 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
                 x2 = np.uint64(HASH_SEED_SELECTION[3 + 2 * t])
                 h1t = splitmix64(to_u64(h1_all[rows]) ^ x1)
                 h2t = splitmix64(to_u64(h2_all[rows]) ^ x2)
-                result[rows] = st._tier_grouped(shard_col[rows], t, h1t, h2t)
+                result[rows] = st._probe_tier(t, shard_col[rows], h1t, h2t,
+                                              np.ones(rows.size, dtype=bool))
             yield pa.RecordBatch.from_arrays(
                 [batch.column("_skh_a"), batch.column("_skh_b"),
                  pa.array(result, pa.bool_())],
@@ -1155,6 +1145,7 @@ class GroupBloom:
 
     def update_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
         tier_h = derive_tier_hashes(h1, h2, self.state.tiers)
+        self.state._layout = self.state._index = None  # the insert may open levels
         _insert_batch(self.state.shards[0], tier_h, self.state.m0,
                       self.state.threshold, self.state.rehash, self.cap_div)
 

@@ -252,10 +252,15 @@ def with_cbf_membership(df: DataFrame, col: str, state: CountingBloom,
     probe UDF (:func:`~sparksketch.bloom.broadcast_probe_udf`), exactly as
     :func:`~sparksketch.bloom.with_membership` does."""
     from sparksketch.bloom import broadcast_probe_udf
-    probe = broadcast_probe_udf(df.sparkSession, state.to_bytes(),
-                                CountingBloom.from_bytes)
+    probe = broadcast_probe_udf(df.sparkSession, state.to_bytes(), _decode_cbf)
     key = F.col(col).cast("string")
     return df.withColumn(out, probe(*[hash_col(key, s) for s in CBF_SEEDS]))
+
+
+def _decode_cbf(blob: bytes) -> CountingBloom:
+    """The probe UDF's decoder: a module-level function, so cloudpickle
+    ships it by reference (see :func:`sparksketch.bloom._decode_state`)."""
+    return CountingBloom.from_bytes(blob)
 
 
 def cbf_by_group(df: DataFrame, group_col: str, col: str,

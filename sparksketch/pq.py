@@ -355,6 +355,8 @@ def _codes_matrix(code_arr, m_sub: int) -> np.ndarray:
     misalign every subsequent row's distances."""
     if isinstance(code_arr, pa.ChunkedArray):
         code_arr = code_arr.combine_chunks()
+    if not pa.types.is_binary(code_arr.type):  # large_binary has int64 offsets
+        raise ValueError(f"pq codes must be an Arrow binary column, got {code_arr.type}")
     buf = np.frombuffer(code_arr.buffers()[2], dtype=np.uint8)
     offs = np.frombuffer(code_arr.buffers()[1], dtype=np.int32)[
         code_arr.offset : code_arr.offset + len(code_arr) + 1]

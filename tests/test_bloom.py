@@ -9,11 +9,16 @@ All data and seeds are fixed → tests are fully deterministic.
 
 import random
 
+import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sparksketch.bloom import (
     BloomFilterState,
+    Level,
+    _insert_tier,
     build_bloom,
     build_bloom_states,
     hash_probe_cols,
@@ -24,6 +29,15 @@ from sparksketch.bloom import (
     with_membership,
 )
 from sparksketch.config import Accuracy, BloomConfig, InitialCapacity, Throughput, expected_n, optimal_k
+from sparksketch.hashing import (
+    HASH_SEED_SELECTION,
+    derive_shard,
+    derive_tier_hashes,
+    km_indices,
+    set_bits,
+    spark_xxhash64,
+)
+from sparksketch.hashing import test_bits as check_bits
 
 N_KEYS = 20_000
 N_SHARDS = 64
@@ -367,34 +381,217 @@ def test_sync_port_200k(spark):
     assert state.key_count == n
 
 
-def test_stacked_probe_equals_fallback(spark):
-    """The uniform-geometry fast path and the per-shard fallback must agree
-    bit-for-bit. Force mixed geometry by merging filters whose shards grew
-    to different depths."""
-    import numpy as np
-    from sparksketch.hashing import spark_xxhash64
+def _oracle_contains(state, h1, h2):
+    """Scalar reference probe, one key at a time and independent of the
+    probe index: per tier, OR over that tier's levels of ``check_bits`` on
+    the level's own bits; AND over tiers, and in strict mode over both
+    shards of each tier."""
+    n = state.n_shards
+    out = np.zeros(len(h1), dtype=bool)
+    for i in range(len(h1)):
+        a, b = h1[i:i + 1], h2[i:i + 1]
+        routes = [int(derive_shard(a, n)[0]), int(derive_shard(b, n)[0])]
+        member = True
+        for t, (th1, th2) in enumerate(derive_tier_hashes(a, b, state.tiers)):
+            sids = [routes[t], (routes[t] + (n - 1) // 2) % n] if state.strict else [routes[0]]
+            for sid in sids:
+                levels = state.shards[sid][t] if sid in state.shards else []
+                member &= any(check_bits(lv.bits, km_indices(th1, th2, lv.k, lv.m))[0]
+                              for lv in levels)
+        out[i] = member
+    return out
 
-    # uniform geometry (hint → single level everywhere): fast path active
-    uni = build_bloom(_keys_df(spark, 0, 4000), "key", BloomConfig(), n_shards=8,
-                      partitions=4, expected_keys=4000)
-    assert uni._build_stacked() is not None
-    # mixed geometry: no hint → shards grow to different level depths
-    mixed = build_bloom(_keys_df(spark, 0, 4000), "key", BloomConfig(), n_shards=8,
-                        partitions=4)
-    keys = [str(k) for k in range(0, 8000)]
-    h1 = np.array([spark_xxhash64(k, 0x8BADF00D) for k in keys], dtype=np.uint64).view(np.int64)
-    h2 = np.array([spark_xxhash64(k, 0xDEADBABE) for k in keys], dtype=np.uint64).view(np.int64)
-    for state in (uni, mixed):
-        fast = state.contains_hashes(h1, h2) if state._build_stacked() else None
-        # force the fallback path by clearing the cache and faking mixed sig
-        state._stacked = {}
-        slow = state.contains_hashes(h1, h2)
-        state._stacked = None
-        full = state.contains_hashes(h1, h2)
-        assert (slow == full).all()
-        if fast is not None:
-            assert (fast == slow).all()
-        assert slow[:4000].all()  # inserted keys
+
+def _key_hashes(keys):
+    """The two base hashes the build and the probe derive everything from."""
+    return tuple(np.array([spark_xxhash64(str(k), seed) for k in keys], dtype=np.uint64)
+                 .view(np.int64) for seed in HASH_SEED_SELECTION[:2])
+
+
+def _assert_probe_matches_oracle(state, inserted, absent):
+    """The flat probe of ``state`` and of its decoded blob equals the oracle
+    on every key, and every inserted key is a member."""
+    h1, h2 = _key_hashes(list(inserted) + list(absent))
+    want = _oracle_contains(state, h1, h2)
+    assert want[:len(inserted)].all()
+    assert (state.contains_hashes(h1, h2) == want).all()
+    decoded = BloomFilterState.from_bytes(state.to_bytes())
+    assert (decoded.contains_hashes(h1, h2) == want).all()
+
+
+@pytest.fixture(scope="module")
+def strict_default_geometry(spark):
+    """A strict filter at the default 4096 shards with multi-level
+    shard-tiers (InitialCapacity.LOW + Accuracy.HIGH: 107 keys per level 0,
+    ~240 keys routed to each of shards 0..7): its per-shard states table,
+    its driver fold and the inserted keys."""
+    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
+                      strict_parity=True)
+    hot = (_keys_df(spark, 20_000, 1_000_000).select("key", *hash_probe_cols("key"))
+           .where(route_expr(cfg.shards) < 8).select("key"))
+    df = _keys_df(spark, 0, 20_000).union(hot).cache()
+    states = build_bloom_states(df, "key", cfg, partitions=4)[0].cache()
+    state = BloomFilterState.empty(cfg, cfg.shards)
+    for r in states.collect():
+        state.merge(BloomFilterState.from_bytes(r.state))
+    assert state.n_shards == 4096
+    assert max(len(t) for c in state.shards.values() for t in c) >= 2
+    yield df, states, state, [r.key for r in df.collect()]
+    states.unpersist()
+    df.unpersist()
+
+
+def test_flat_probe_equals_scalar_oracle(spark, strict_default_geometry):
+    """One flat probe for every geometry: uniform, mixed level depths (a
+    merge of partials), strict at 4096 shards with multi-level tiers, level
+    indices that are not contiguous, and an empty filter."""
+    cfg = BloomConfig()
+    absent = [f"absent-{k}" for k in range(3000)]
+
+    uniform = build_bloom(_keys_df(spark, 0, 4000), "key", cfg, n_shards=8,
+                          partitions=4, expected_keys=4000)
+    assert {len(t) for c in uniform.shards.values() for t in c} == {1}
+    _assert_probe_matches_oracle(uniform, range(4000), absent)
+
+    # ~275 keys per shard against level 0's 273: some shard-tiers open a
+    # second level, some do not; the merged partial adds keys to both kinds
+    mixed = build_bloom(_keys_df(spark, 0, 4400), "key", cfg, n_shards=16, partitions=4)
+    mixed.merge(build_bloom(_keys_df(spark, 4400, 5000), "key", cfg, n_shards=16,
+                            partitions=4))
+    assert {len(t) for c in mixed.shards.values() for t in c} >= {1, 2}
+    _assert_probe_matches_oracle(mixed, range(5000), absent)
+
+    _, _, strict, keys = strict_default_geometry
+    rng = random.Random(3)
+    _assert_probe_matches_oracle(strict, rng.sample(keys, 4000), absent)
+
+    # levels {0, 2} in every shard-tier: half the keys in each
+    gapped = BloomFilterState(cfg.tiers, 4, 64, cfg.threshold, cfg.rehash)
+    for sid in range(4):
+        gapped.shards[sid] = [[Level.fresh(0, 64, cfg.threshold), Level.fresh(2, 64, cfg.threshold)]
+                              for _ in range(cfg.tiers)]
+    inserted = [f"gap-{k}" for k in range(200)]
+    h1, h2 = _key_hashes(inserted)
+    for t, (th1, th2) in enumerate(derive_tier_hashes(h1, h2, cfg.tiers)):
+        for i, sid in enumerate(derive_shard(h1, 4)):
+            lv = gapped.shards[int(sid)][t][i % 2]
+            set_bits(lv.bits, km_indices(th1[i:i + 1], th2[i:i + 1], lv.k, lv.m))
+    _assert_probe_matches_oracle(gapped, inserted, absent)
+
+    empty = BloomFilterState.empty(cfg, 16)
+    h1, h2 = _key_hashes(absent)
+    assert not empty.contains_hashes(h1, h2).any()
+    assert not _oracle_contains(empty, h1, h2).any()
+
+
+def test_strict_membership_join_default_geometry(spark, strict_default_geometry):
+    """Strict membership_join at 4096 shards with multi-level shard-tiers
+    equals the broadcast probe on every inserted and absent key."""
+    df, states, state, keys = strict_default_geometry
+    absent = _keys_df(spark, 2_000_000, 2_010_000)
+    probes = df.union(absent)
+    via_join = {r.key: r.is_member for r in membership_join(probes, "key", states).collect()}
+    via_bcast = {r.key: r.is_member for r in with_membership(probes, "key", state).collect()}
+    assert len(via_join) == len(keys) + 10_000
+    assert via_join == via_bcast
+    assert all(via_join[k] for k in keys)
+
+
+def _partial(n_keys: int, n_shards: int, strict: bool, seed: int):
+    """A partial filter with tiny levels (m0=64: 4 keys per level 0) over
+    ``n_keys`` random keys, inserted where a build would put them; returns
+    it with the keys' base hashes."""
+    cfg = BloomConfig()
+    state = BloomFilterState(cfg.tiers, n_shards, 64, cfg.threshold, cfg.rehash, strict=strict)
+    rng = np.random.default_rng(seed)
+    h1, h2 = (rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, n_keys,
+                           dtype=np.int64) for _ in range(2))
+    routes = [derive_shard(h1, n_shards), derive_shard(h2, n_shards)]
+    for t, (th1, th2) in enumerate(derive_tier_hashes(h1, h2, cfg.tiers)):
+        targets = ([routes[t], (routes[t] + (n_shards - 1) // 2) % n_shards] if strict
+                   else [routes[0]])
+        for sids in targets:
+            for sid in np.unique(sids):
+                cascade = state.shards.setdefault(
+                    int(sid), [[Level.fresh(0, 64, cfg.threshold)] for _ in range(cfg.tiers)])
+                rows = sids == sid
+                _insert_tier(cascade[t], th1[rows], th2[rows], 64, cfg.threshold, cfg.rehash)
+    return state, h1, h2
+
+
+@pytest.mark.parametrize("strict", [False, True])
+@given(st.lists(st.tuples(st.integers(min_value=5, max_value=120),
+                          st.integers(min_value=0, max_value=2**32)), min_size=1, max_size=4),
+       st.sampled_from([4, 8]), st.randoms(use_true_random=False))
+@settings(max_examples=15, deadline=None)
+def test_probe_index_follows_merges_and_writes(strict, parts, n_shards, rnd):
+    """Random merges of random partials probe exactly like the oracle after
+    every merge (the shards and levels a merge adds are seen), and an
+    in-place write to a decoded filter's Level.bits is seen by the next
+    probe."""
+    rng = np.random.default_rng(rnd.randrange(2**32))
+    probe = [rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, 200, dtype=np.int64)
+             for _ in range(2)]
+    acc, ins1, ins2 = None, [], []
+    for n_keys, seed in parts:
+        part, h1, h2 = _partial(n_keys, n_shards, strict, seed)
+        if rnd.random() < 0.5:
+            part = BloomFilterState.from_bytes(part.to_bytes())
+        acc = part if acc is None else acc.merge(part)
+        ins1.append(h1)
+        ins2.append(h2)
+        p1, p2 = (np.concatenate([a, b]) for a, b in
+                  zip(probe, (np.concatenate(ins1), np.concatenate(ins2))))
+        got = acc.contains_hashes(p1, p2)
+        assert (got == _oracle_contains(acc, p1, p2)).all()
+        assert got[200:].all()
+
+    decoded = BloomFilterState.from_bytes(acc.to_bytes())
+    assert (decoded.contains_hashes(p1, p2) == got).all()
+    levels = [lv for c in decoded.shards.values() for t in c for lv in t]
+    for lv in rnd.sample(levels, min(3, len(levels))):
+        lv.bits[:] = rnd.choice([0, 2**64 - 1])
+    assert (decoded.contains_hashes(p1, p2) == _oracle_contains(decoded, p1, p2)).all()
+
+
+def test_group_bloom_probe_sees_later_inserts():
+    """A GroupBloom probed, then updated until it opens new levels, still
+    finds every inserted key."""
+    from sparksketch.bloom import GroupBloom
+
+    g = GroupBloom(BloomConfig(), m0=64)
+    rng = np.random.default_rng(5)
+    h1, h2 = (rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, 200, dtype=np.int64)
+              for _ in range(2))
+    g.update_hashes(h1[:2], h2[:2])
+    assert g.state.contains_hashes(h1[:2], h2[:2]).all()
+    g.update_hashes(h1[2:], h2[2:])
+    assert len(g.state.shards[0][0]) > 1
+    assert g.state.contains_hashes(h1, h2).all()
+
+
+def test_probe_decoders_pickle_by_reference(spark, monkeypatch):
+    """The decoders the broadcast probes ship pickle by reference (a bound
+    classmethod would go by value, with every global its code reads)."""
+    from pyspark import cloudpickle
+
+    from sparksketch import bloom
+    from sparksketch.cbf import CountingBloom, with_cbf_membership
+
+    shipped = []
+
+    def fake_udf(spark, blob, deserialize):
+        shipped.append((deserialize, blob))
+        return lambda *cols: F.lit(True)
+
+    monkeypatch.setattr(bloom, "broadcast_probe_udf", fake_udf)
+    df = _keys_df(spark, 0, 10)
+    with_membership(df, "key", BloomFilterState.empty(BloomConfig(), 4))
+    with_cbf_membership(df, "key", CountingBloom(4, 1 << 10))
+    assert len(shipped) == 2
+    for decode, blob in shipped:
+        assert cloudpickle.loads(cloudpickle.dumps(decode)) is decode
+        assert decode(blob).to_bytes() == blob
 
 
 # ---------------- strict parity (2 shards per tier) ----------------

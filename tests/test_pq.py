@@ -118,6 +118,21 @@ def test_pq_validation_errors(spark):
         pq_train(df, "embedding", m_sub=4, k=300, iters=1)
 
 
+def test_codes_matrix_rejects_non_binary_codes():
+    """Codes are read through int32 offsets, so a large_binary column (int64
+    offsets) must raise instead of being misread."""
+    import pyarrow as pa
+
+    from sparksketch.pq import _codes_matrix
+
+    codes = [b"\x01\x02", b"\x03\x04"]
+    assert _codes_matrix(pa.array(codes, pa.binary()), 2).tolist() == [[1, 2], [3, 4]]
+    with pytest.raises(ValueError, match="binary"):
+        _codes_matrix(pa.array(codes, pa.large_binary()), 2)
+    with pytest.raises(ValueError, match="binary"):
+        _codes_matrix(pa.chunked_array([pa.array(codes, pa.large_binary())]), 2)
+
+
 def test_pq_adc_table_matches_bruteforce(spark):
     df, vecs = _representable(spark)
     model = pq_train(df, "embedding", m_sub=M_SUB, k=K, iters=4, seed=3)
