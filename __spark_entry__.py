@@ -1146,6 +1146,22 @@ def _chi2_drift_docs(spark: SparkSession, sf: str) -> DataFrame:
     return chi2_cells(docs, "source", "lang")
 
 
+def _remove_dead_pid_dirs(parent: str, prefix: str) -> None:
+    """Remove the ``<prefix><pid>`` dirs under ``parent`` whose process no
+    longer exists; the dirs of live processes (this one included) stay."""
+    import shutil
+    for name in os.listdir(parent):
+        pid = name[len(prefix):]
+        if not (name.startswith(prefix) and pid.isdigit()) or int(pid) == os.getpid():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except (PermissionError, OverflowError):
+            pass  # alive under another user / not a pid
+
+
 def _bm25_index_docs(spark: SparkSession, sf: str) -> DataFrame:
     # persisted-inverted-index BM25 (the repeated-query scale path: a
     # bucket-partitioned postings table answers from |terms|/n_buckets of
@@ -1157,16 +1173,19 @@ def _bm25_index_docs(spark: SparkSession, sf: str) -> DataFrame:
     # accumulated) the returned lazy DataFrame keeps reading from — the
     # pid suffix keeps two concurrent gate runs at the same SF (driver +
     # check_oracle) from overwriting each other's postings mid-read, the
-    # same race _compact_roundtrip_docs pid-scopes its sink against.
+    # same race _compact_roundtrip_docs pid-scopes its sink against.  The
+    # live dir stays (the lazy result reads it); siblings of runs whose
+    # process has exited are removed before writing.
     import hashlib
-    import os
+    import tempfile
 
     from pyspark.sql import Window
     from sparksketch.textstats import (bm25_index_topk, bm25_topk,
                                        write_bm25_index)
     docs = _T(spark, sf, "documents")
-    path = (f"/tmp/sk_bm25_gate_{hashlib.md5(sf.encode()).hexdigest()[:10]}"
-            f"_{os.getpid()}")
+    prefix = f"sk_bm25_gate_{hashlib.md5(sf.encode()).hexdigest()[:10]}_"
+    _remove_dead_pid_dirs(tempfile.gettempdir(), prefix)
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}{os.getpid()}")
     write_bm25_index(docs, path, n_buckets=16)
     terms = ["hash", "join", "vector"]
     via = bm25_index_topk(spark, path, terms, n_buckets=16, k=10)
@@ -1936,10 +1955,10 @@ def _customers_without_orders(spark: SparkSession, sf: str) -> DataFrame:
 def _bloom_distinct_estimate(spark: SparkSession, sf: str) -> DataFrame:
     # cardinality-from-fill certificate (Swamidass & Baldi 2007): the
     # filter built over the raw event stream doubles as a distinct-user
-    # sketch — no extra pass, no extra state.  expected_keys is sized to
-    # 2x INSERTIONS (cascade growth is insertion-counted; a second level
-    # would re-count re-inserted keys — documented in estimate_distinct,
-    # and headroom keeps the build single-level).  Band: 15% + 20 absolute
+    # sketch — no extra pass, no extra state.  The build drops duplicate
+    # keys, so levels fill by distinct count; expected_keys at 2x the
+    # event count is headroom that keeps every cascade single-level (one
+    # level per shard-tier for the fill formula).  Band: 15% + 20 absolute
     # covers the small-n fill noise; fixed seeds pin the boolean.
     ev = _T(spark, sf, "events").filter("user_id IS NOT NULL")
     exact = ev.select("user_id").distinct().count()

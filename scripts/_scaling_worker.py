@@ -20,7 +20,7 @@ n = wp.count()
 
 def run():
     return build_bloom(wp, "url", BloomConfig(), n_shards=256, partitions=cores,
-                       expected_keys=n, route=True)
+                       expected_keys=n)
 
 
 state = run()  # warmup: spawns python workers, JITs codegen, warms page cache

@@ -23,7 +23,9 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
   rehash (filter.rs:227-274), which is hostile to distributed merging, a
   shard-tier grows by *freezing* its active level and opening the next with
   ``m_{l+1} = 2·m_l`` when fill reaches the reference's rehash threshold
-  (``m/n <= threshold``, filter.rs:373-375).  Deterministic geometry
+  (``m/n <= threshold``, filter.rs:373-375).  The build sorts each shard's
+  keys and drops duplicates, and the key of rank r lands in the first level
+  whose cumulative capacity exceeds r.  Deterministic geometry
   ``m_l = m0·2^l`` with ``k_l = optimal_k(m_l, expected_n(m_l))``
   (filter.rs:377-389) makes same-level arrays always OR-compatible, so merges
   are associative + commutative and never clear bits → zero false negatives
@@ -34,6 +36,9 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
   The shuffle carries only two int64 base hashes per row (16 B) — shard id
   and per-tier KM pairs are derived in-kernel via splitmix64 — never the
   key text; at 100 TB input the shuffle is ~GBs.
+- **Build** — shard Exchange → external sort → one Arrow kernel per task,
+  one scatter per tier and level index across a batch's shards; a task
+  holds its shards' levels plus one batch (:func:`build_bloom_states`).
 - **Merge** — one in-place fold, :meth:`BloomFilterState.merge`: the driver
   collects the per-shard byte blobs once, parses each once and merges it in
   linearly.  Disjoint shards concatenate; same-shard same-level bitsets OR
@@ -59,6 +64,7 @@ filters alike; ``from_bytes`` decodes straight into that buffer.
 
 from __future__ import annotations
 
+import hashlib
 import io
 import json
 import math
@@ -81,9 +87,8 @@ from sparksketch.hashing import (
     km_indices,
     set_bits,
     spark_xxhash64,
-    splitmix64,
     test_bits,
-    to_u64,
+    tier_hashes,
 )
 
 _MAGIC = b"SKBF"
@@ -442,10 +447,11 @@ class BloomFilterState:
         DISTINCT keys, with no extra pass and no extra state — the filter
         itself is the cardinality sketch.
 
-        Caveats: a key re-inserted AFTER its level froze (cascade growth)
-        counts once per level it landed in — size ``expected_keys`` so the
-        build stays single-level for an exact-distinct reading; a saturated
-        level (X == m) contributes its capacity bound instead of ∞.
+        Caveats: one build places each distinct key once, so duplicates
+        within a build never count twice; but merges of separate builds
+        (streaming micro-batches, say) add, and a key present in two of
+        them counts once per level it landed in.  A saturated level
+        (X == m) contributes its capacity bound instead of ∞.
         Strict-parity filters insert every key into TWO tier-0 shards
         (p1 and the antipodal p2, filter.rs:120-137), so the tier-0
         aggregate fill reflects 2n placements — divided back out below.
@@ -494,6 +500,9 @@ class BloomFilterState:
 
 _ROUTE = "_skshard"
 _STATE_SCHEMA = "shard int, rows long, state binary"
+_KERNEL_VERSION = 2  # in the build fingerprint: 2 is the sorted, deduplicated kernel
+_SCATTER_ROWS = 8192      # rows per km_indices + set_bits: bounds the (rows, k) temporaries
+_BATCH_BYTES = 64 << 20   # a task's shard blobs leave in batches of about this size
 
 
 def _next_pow2(x: int) -> int:
@@ -550,49 +559,152 @@ def strict_targets(n_shards: int) -> Column:
     )
 
 
-def _insert_tier(levels: list[Level], h1: np.ndarray, h2: np.ndarray,
-                 m0: int, threshold: float, rehash: bool, cap_div: int = 1) -> None:
-    """Insert a batch of (h1,h2) rows into ONE tier's level cascade, opening
-    new levels at the reference's fill threshold (filter.rs:92-118: the scale
-    trigger; level-open replaces CAS + rehash channel + catch-up)."""
-    pos, total = 0, h1.shape[0]
-    while pos < total:
-        lv = levels[-1]
-        if rehash:
-            room = max(lv.capacity(threshold) // cap_div, 1) - lv.n
-            if room <= 0:
-                levels.append(Level.fresh(lv.idx + 1, m0, threshold))
-                continue
-            take = min(room, total - pos)
-        else:
-            take = total - pos  # fixed geometry: absorb everything (FPR degrades, flagged)
-        idx = km_indices(h1[pos : pos + take], h2[pos : pos + take], lv.k, lv.m)
-        set_bits(lv.bits, idx)
-        lv.n += take
-        pos += take
+def _insert_ranked(rank: np.ndarray, first: int, m0: int, threshold: float, rehash: bool,
+                   cap_div: int, tier_rows: list[tuple[int, np.ndarray, np.ndarray]],
+                   target) -> None:
+    """The one insert kernel: level by rank, then scatter.  Levels
+    ``first``, ``first + 1``, ... take the ranks in order, each up to its
+    capacity (the reference's fill threshold, filter.rs:92-118, split
+    ``cap_div`` ways; without rehash ``first`` takes all), and each tier's
+    (t, h1_t, h2_t) rows get their k bits by one chunked scatter per level
+    into ``target(t, idx, rows)``: (flat words, bit offset per row or None)."""
+    if not rank.size:
+        return
+    caps = [max(expected_n(m0 << first, threshold) // cap_div, 1)]
+    while rehash and sum(caps) <= rank.max():
+        caps.append(max(expected_n(m0 << (first + len(caps)), threshold) // cap_div, 1))
+    pos = np.searchsorted(np.cumsum(caps[:-1]), rank, side="right")
+    for p in range(len(caps)):
+        rows = np.flatnonzero(pos == p)
+        if not rows.size:
+            continue
+        m, k = Level.geometry(first + p, m0, threshold)
+        for t, h1, h2 in tier_rows:
+            words, base = target(t, first + p, rows)
+            if rows.size < rank.size:  # one level takes every row: no gather
+                h1, h2 = h1[rows], h2[rows]
+            for s in range(0, rows.size, _SCATTER_ROWS):
+                bit = km_indices(h1[s:s + _SCATTER_ROWS], h2[s:s + _SCATTER_ROWS], k, m)
+                set_bits(words, bit if base is None else bit + base[s:s + _SCATTER_ROWS, None])
 
 
-def _insert_batch(cascade: list[list[Level]], tier_h: list[tuple[np.ndarray, np.ndarray]],
-                  m0: int, threshold: float, rehash: bool, cap_div: int = 1) -> None:
-    """Insert a batch of (h1,h2) rows into every tier of one shard cascade."""
-    for t, (h1, h2) in enumerate(tier_h):
-        _insert_tier(cascade[t], h1, h2, m0, threshold, rehash, cap_div)
+def _insert_arrivals(levels: list[Level], h1: np.ndarray, h2: np.ndarray, m0: int,
+                     threshold: float, rehash: bool, cap_div: int = 1) -> None:
+    """Insert (h1_t, h2_t) rows into one tier's cascade in arrival order:
+    ranks continue from the active level's fill, and levels open as ranks
+    reach them (:class:`GroupBloom`; the distributed build sorts first)."""
+    def target(_t, idx, rows):
+        if levels[-1].idx < idx:
+            levels.append(Level.fresh(idx, m0, threshold))
+        levels[-1].n += rows.size
+        return levels[-1].bits, None
+
+    first, fill = levels[-1].idx, levels[-1].n
+    _insert_ranked(fill + np.arange(h1.size), first, m0, threshold, rehash, cap_div,
+                   [(0, h1, h2)], target)
+
+
+class _TaskLevels:
+    """A build task's shard-tier levels, laid out for a flat scatter: per
+    (tier, level index) one words buffer with a row per shard that reached
+    the level, so one ``set_bits`` covers every shard of a batch.  Buffers
+    grow by doubling, so a task holds only its own shards' levels."""
+
+    def __init__(self, tiers: int, n_shards: int, m0: int, threshold: float):
+        self.tiers, self.n_shards, self.m0, self.threshold = tiers, n_shards, m0, threshold
+        self.at: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}  # row, keys per shard
+        self.words: dict[tuple[int, int], np.ndarray] = {}  # uint64[rows, m // 64]
+
+    def rows(self, t: int, idx: int, shard: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(flat words of tier ``t``'s level ``idx``, bit offset of each
+        ``shard``'s row in it), adding rows for shards new to the level."""
+        m = self.m0 << idx
+        if (t, idx) not in self.at:
+            self.at[t, idx] = (np.full(self.n_shards, -1, dtype=np.int64),
+                               np.zeros(self.n_shards, dtype=np.int64))
+            self.words[t, idx] = np.zeros((16, m // 64), dtype=np.uint64)
+        row, n = self.at[t, idx]
+        new = np.unique(shard[row[shard] < 0])
+        if new.size:
+            used, words = int(row.max()) + 1, self.words[t, idx]
+            if used + new.size > len(words):
+                self.words[t, idx] = np.zeros((2 * (used + new.size), m // 64), dtype=np.uint64)
+                self.words[t, idx][:used] = words[:used]
+            row[new] = np.arange(used, used + new.size)
+        n += np.bincount(shard, minlength=self.n_shards)
+        return self.words[t, idx].reshape(-1), row[shard].astype(np.uint64) * np.uint64(m)
+
+    def state(self, cfg: BloomConfig) -> BloomFilterState:
+        """The task's filter: every shard it saw, with level 0 in every tier."""
+        st = BloomFilterState(self.tiers, self.n_shards, self.m0, self.threshold, cfg.rehash,
+                              strict=cfg.strict_parity)
+        for (t, idx), (row, n) in sorted(self.at.items()):
+            m, k = Level.geometry(idx, self.m0, self.threshold)
+            for sid in np.flatnonzero(row >= 0).tolist():
+                cascade = st.shards.setdefault(sid, [[] for _ in range(self.tiers)])
+                cascade[t].append(Level(idx, m, k, int(n[sid]), self.words[t, idx][row[sid]]))
+        for levels in (lv for cascade in st.shards.values() for lv in cascade):
+            if not levels:  # strict: no key of this shard routed to this tier
+                levels.append(Level.fresh(0, self.m0, self.threshold))
+        return st
+
+
+def _column(batch: pa.RecordBatch, name: str) -> np.ndarray:
+    return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _shard_batches(st: BloomFilterState):
+    """A task's shards as single-shard blobs, in one Arrow batch unless the
+    blobs pass ``_BATCH_BYTES`` (a binary column holds < 2 GiB)."""
+    sids, rows, blobs, size = [], [], [], 0
+    for i, sid in enumerate(sorted(st.shards)):
+        sids.append(sid)
+        rows.append(sum(lv.n for lv in st.shards[sid][0]))
+        blobs.append(BloomFilterState(st.tiers, st.n_shards, st.m0, st.threshold, st.rehash,
+                                      {sid: st.shards[sid]}, strict=st.strict).to_bytes())
+        size += len(blobs[-1])
+        if i == len(st.shards) - 1 or size >= _BATCH_BYTES:
+            yield pa.RecordBatch.from_pydict({"shard": pa.array(sids, pa.int32()),
+                                              "rows": pa.array(rows, pa.int64()),
+                                              "state": pa.array(blobs, pa.binary())})
+            sids, rows, blobs, size = [], [], [], 0
+
+
+def _digest(blob: bytes) -> str:
+    return hashlib.blake2b(blob, digest_size=8).hexdigest()
+
+
+def _write_checkpoint(checkpoint_dir: str, pid: int, st: BloomFilterState, nrows: int,
+                      fingerprint: str) -> None:
+    """The task's blob, then the meta that vouches for it (fingerprint,
+    length, digest).  The old meta goes first: a task that dies in between
+    leaves a blob no meta vouches for, which a resume rebuilds."""
+    blob = st.to_bytes()
+    meta = {"pid": pid, "rows": nrows, "fingerprint": fingerprint, "shards": sorted(st.shards),
+            "bytes": len(blob), "blake2b": _digest(blob)}
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    part = os.path.join(checkpoint_dir, f"part-{pid:05d}")
+    if os.path.exists(part + ".meta.json"):
+        os.remove(part + ".meta.json")
+    tmp = os.path.join(checkpoint_dir, f".part-{pid:05d}")
+    for ext, tmp_ext, data in ((".bin", ".tmp", blob),
+                               (".meta.json", ".meta.tmp", json.dumps(meta).encode())):
+        with open(tmp + tmp_ext, "wb") as f:
+            f.write(data)
+        os.replace(tmp + tmp_ext, part + ext)
 
 
 def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
                         checkpoint_dir: str | None, fingerprint: str | None,
-                        completed: frozenset[int], cap_div: int = 1):
-    """``cap_div=1``: routed mode — each shard is owned by one task, level
-    capacities are exact.  ``cap_div=P``: scan-local mode — every task may
-    touch every shard, so each task gets a 1/P share of each level's
-    capacity; the OR-merge then fills levels to ≤ their global capacity.
-
-    Strict-parity batches carry pre-exploded (shard, tier) insert targets
-    (``_skshard``/``_sktier`` columns) — each row is one single-tier insert
-    event; default batches carry one row per key and insert into every tier
-    of the h1-routed shard."""
-    tiers, threshold, rehash = cfg.tiers, cfg.threshold, cfg.rehash
-    strict = cfg.strict_parity
+                        completed: frozenset[int]):
+    """The build kernel over a task's rows sorted by (shard, h1, h2); strict
+    rows are the (shard, tier) insert targets (``_skshard``/``_sktier``),
+    sorted by (shard, tier, h1, h2).  Adjacent duplicate (h1, h2) pairs are
+    dropped (a key's bits are a function of them), each key's rank within
+    its shard(-tier) picks its level, and one scatter per tier and level
+    index covers every shard of the batch.  Ranks and the last pair carry
+    across batches, so the filter is a function of the distinct key set."""
+    tiers, strict = cfg.tiers, cfg.strict_parity
 
     def fn(batches):
         ctx = TaskContext.get()
@@ -601,77 +713,46 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
             # resume: replay the checkpointed state WITHOUT consuming the
             # input iterator — the task finishes without scanning its split
             # (per-partition lineage, north_rule).
-            path = os.path.join(checkpoint_dir, f"part-{pid:05d}.bin")
-            with open(path, "rb") as f:
-                blob = f.read()
-            st = BloomFilterState.from_bytes(blob)
-            for sid in sorted(st.shards):
-                one = BloomFilterState(tiers, n_shards, m0, threshold, rehash, strict=strict)
-                one.shards[sid] = st.shards[sid]
-                rows = sum(lv.n for lv in st.shards[sid][0])
-                yield pa.RecordBatch.from_pydict({
-                    "shard": pa.array([sid], pa.int32()),
-                    "rows": pa.array([rows], pa.int64()),
-                    "state": pa.array([one.to_bytes()], pa.binary()),
-                })
+            with open(os.path.join(checkpoint_dir, f"part-{pid:05d}.bin"), "rb") as f:
+                yield from _shard_batches(BloomFilterState.from_bytes(f.read()))
             return
 
-        local: dict[int, list[list[Level]]] = {}
-        nrows = 0
+        levels = _TaskLevels(tiers, n_shards, m0, cfg.threshold)
+        count = np.zeros(n_shards * (tiers if strict else 1), dtype=np.int64)  # keys per group
+        last, nrows = None, 0
         for batch in batches:
-            h1_i64 = batch.column("_skh_a").to_numpy(zero_copy_only=False).astype(np.int64)
-            h2_i64 = batch.column("_skh_b").to_numpy(zero_copy_only=False).astype(np.int64)
-            tier_cols = derive_tier_hashes(h1_i64, h2_i64, tiers)
             nrows += batch.num_rows
+            if not batch.num_rows:
+                continue
+            h1, h2 = _column(batch, "_skh_a"), _column(batch, "_skh_b")
             if strict:
-                sid_arr = batch.column(_ROUTE).to_numpy(zero_copy_only=False).astype(np.int64)
-                tier_arr = batch.column("_sktier").to_numpy(zero_copy_only=False).astype(np.int64)
-                key = sid_arr * tiers + tier_arr  # group by (shard, tier)
+                shard, tier = _column(batch, _ROUTE), _column(batch, "_sktier")
+                group = shard * tiers + tier
             else:
-                sid_arr = derive_shard(h1_i64, n_shards)
-                key = sid_arr
-            order = np.argsort(key, kind="stable")
-            sorted_key = key[order]
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(sorted_key)) + 1, [len(sorted_key)]))
-            for si in range(len(starts) - 1):
-                rows = order[starts[si] : starts[si + 1]]
-                k = int(sorted_key[starts[si]])
-                sid, t = (divmod(k, tiers)) if strict else (k, 0)
-                cascade = local.get(sid)
-                if cascade is None:
-                    cascade = [[Level.fresh(0, m0, threshold)] for _ in range(tiers)]
-                    local[sid] = cascade
-                if strict:
-                    _insert_tier(cascade[t], tier_cols[t][0][rows], tier_cols[t][1][rows],
-                                 m0, threshold, rehash, cap_div)
-                else:
-                    _insert_batch(cascade, [(h1[rows], h2[rows]) for h1, h2 in tier_cols],
-                                  m0, threshold, rehash, cap_div)
+                shard = group = derive_shard(h1, n_shards)
+            keep = np.empty(h1.size, dtype=bool)
+            keep[0] = last != (group[0], h1[0], h2[0])
+            keep[1:] = (group[1:] != group[:-1]) | (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
+            last = (group[-1], h1[-1], h2[-1])
+            h1, h2, shard, group = h1[keep], h2[keep], shard[keep], group[keep]
+            if not group.size:
+                continue
+            starts = np.flatnonzero(np.concatenate(([True], group[1:] != group[:-1])))
+            runs = np.diff(np.append(starts, group.size))
+            rank = np.arange(group.size) - np.repeat(starts - count[group[starts]], runs)
+            count[group[starts]] += runs
+            # strict rows carry one tier each; default rows go to every tier
+            parts = ([(np.flatnonzero(tier[keep] == t), [t]) for t in range(tiers)] if strict
+                     else [(slice(None), range(tiers))])
+            for sel, ts in parts:
+                _insert_ranked(rank[sel], 0, m0, cfg.threshold, cfg.rehash, 1,
+                               [(t, *tier_hashes(h1[sel], h2[sel], t)) for t in ts],
+                               lambda t, idx, r, s=shard[sel]: levels.rows(t, idx, s[r]))
 
+        st = levels.state(cfg)
         if checkpoint_dir:
-            st = BloomFilterState(tiers, n_shards, m0, threshold, rehash, local, strict=strict)
-            blob = st.to_bytes()
-            tmp = os.path.join(checkpoint_dir, f".part-{pid:05d}.tmp")
-            os.makedirs(checkpoint_dir, exist_ok=True)
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, os.path.join(checkpoint_dir, f"part-{pid:05d}.bin"))
-            meta = {"pid": pid, "rows": nrows, "fingerprint": fingerprint,
-                    "shards": sorted(local), "bytes": len(blob)}
-            mtmp = os.path.join(checkpoint_dir, f".part-{pid:05d}.meta.tmp")
-            with open(mtmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(mtmp, os.path.join(checkpoint_dir, f"part-{pid:05d}.meta.json"))
-
-        for sid in sorted(local):
-            one = BloomFilterState(tiers, n_shards, m0, threshold, rehash, strict=strict)
-            one.shards[sid] = local[sid]
-            rows = sum(lv.n for lv in local[sid][0])
-            yield pa.RecordBatch.from_pydict({
-                "shard": pa.array([sid], pa.int32()),
-                "rows": pa.array([rows], pa.int64()),
-                "state": pa.array([one.to_bytes()], pa.binary()),
-            })
+            _write_checkpoint(checkpoint_dir, pid, st, nrows, fingerprint)
+        yield from _shard_batches(st)
 
     return fn
 
@@ -679,25 +760,39 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
 def build_fingerprint(cfg: BloomConfig, n_shards: int, m0: int, partitions: int,
                       col: str, input_id: str) -> str:
     payload = (f"{cfg.tiers}|{cfg.threshold}|{cfg.rehash}|{n_shards}|{m0}"
-               f"|{partitions}|{col}|{input_id}|strict={int(cfg.strict_parity)}")
+               f"|{partitions}|{col}|{input_id}|strict={int(cfg.strict_parity)}"
+               f"|kernel={_KERNEL_VERSION}")
     return format(spark_xxhash64(payload, 7), "016x")
 
 
-def completed_partitions(checkpoint_dir: str | None, fingerprint: str) -> frozenset[int]:
+def completed_partitions(checkpoint_dir: str | None, fingerprint: str, cfg: BloomConfig,
+                         n_shards: int, m0: int) -> frozenset[int]:
+    """Partitions a resume may replay: the meta carries this build's
+    fingerprint, the blob has the length and digest the meta records, and
+    the blob header has this build's geometry.  Every other partition,
+    malformed metas included, is rebuilt."""
     if not checkpoint_dir or not os.path.isdir(checkpoint_dir):
         return frozenset()
+    want = (cfg.tiers, n_shards, cfg.threshold, cfg.rehash, cfg.strict_parity, m0)
     done = set()
     for name in os.listdir(checkpoint_dir):
-        if name.endswith(".meta.json"):
-            try:
-                with open(os.path.join(checkpoint_dir, name)) as f:
-                    meta = json.load(f)
-            except (OSError, json.JSONDecodeError):
+        if not name.endswith(".meta.json"):
+            continue
+        try:
+            with open(os.path.join(checkpoint_dir, name)) as f:
+                meta = json.load(f)
+            pid = meta["pid"]
+            if (type(pid) is not int or name != f"part-{pid:05d}.meta.json"
+                    or meta["fingerprint"] != fingerprint):
                 continue
-            if meta.get("fingerprint") == fingerprint and os.path.exists(
-                os.path.join(checkpoint_dir, f"part-{meta['pid']:05d}.bin")
-            ):
-                done.add(int(meta["pid"]))
+            with open(os.path.join(checkpoint_dir, f"part-{pid:05d}.bin"), "rb") as f:
+                blob = f.read()
+            tiers, shards, _n, threshold, rehash, strict, blob_m0 = _parse_header(blob)
+            if ((len(blob), _digest(blob)) == (meta["bytes"], meta["blake2b"])
+                    and (tiers, shards, threshold, rehash, strict, blob_m0) == want):
+                done.add(pid)
+        except (OSError, ValueError, KeyError, TypeError):
+            continue
     return frozenset(done)
 
 
@@ -705,36 +800,31 @@ def build_bloom_states(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig()
                        n_shards: int | None = None, partitions: int | None = None,
                        expected_keys: int | None = None,
                        checkpoint_dir: str | None = None, input_id: str = "",
-                       enforce_key_limit: bool = True, route: bool = True) -> tuple[DataFrame, dict]:
+                       enforce_key_limit: bool = True) -> tuple[DataFrame, dict]:
     """Distributed build → DataFrame of ``(shard int, rows long, state binary)``.
 
     This is the at-scale product: the filter stays a DataFrame (never
     collected), queryable via :func:`membership_join` and persistable with
     plain ``.write.parquet``.
 
-    Two physical modes:
+    Plan: parquet scan → Project (key cast, guard filter, JVM hash columns —
+    whole-stage codegen) → Exchange on shard id (16 B/row — two base hashes;
+    never the text) → Sort within partitions by (shard, h1, h2), strict by
+    (shard, tier, h1, h2) (Spark's external sort: it spills) → MapInArrow
+    (:func:`_build_partition_fn`).  Each shard is built by one task, which
+    holds its shards' levels (filter_size / partitions) plus one Arrow
+    batch.  Row order, input partitioning and duplicate keys change no byte
+    of the filter, and ``key_count`` counts distinct keys.
 
-    - ``route=True`` (default, the 10^12-doc mode): parquet scan → Project
-      (key cast, guard filter, JVM hash columns — whole-stage codegen) →
-      Exchange on shard id (16 B/row — two base hashes; never the text) →
-      MapInArrow (numpy bit kernel).  Each shard is built by exactly one task with exact
-      level capacities, and per-task memory is filter_size / n_shards —
-      mandatory when the filter is far bigger than one task's memory.
     Checkpointing (``checkpoint_dir``) assumes ONE filesystem visible to the
     driver and every task at the same path — true in local mode and on any
     shared mount (NFS, fuse-mounted object store); on a cluster without one,
-    point it at such a mount or leave it off.  If ``input_id`` is empty it
+    point it at such a mount or leave it off.  A partition is replayed only
+    if its blob matches its meta's length and digest and the build's
+    geometry (:func:`completed_partitions`).  If ``input_id`` is empty it
     defaults to a fingerprint of the DataFrame's input files, so checkpoints
     of different source tables never collide; for non-file sources pass an
     explicit ``input_id``.
-
-    - ``route=False`` (scan-local): no shuffle at all — every scan
-      partition builds 1/P-capacity sub-levels for the shards it sees and
-      the OR-merge aligns them (map-side partial aggregation).  Each task
-      may hold the whole filter, so use it when filter_size fits in a task
-      (up to ~GBs).  Measured: the post-shuffle row→Arrow conversion has a
-      serial component that caps routed-mode scaling on one box; scan-local
-      scales with cores until memory bandwidth.
     """
     spark = df.sparkSession
     n_shards = n_shards or cfg.shards
@@ -766,21 +856,16 @@ def build_bloom_states(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig()
                   .select("_skh_a", "_skh_b",
                           F.col("_tgt.t").alias("_sktier"),
                           F.col("_tgt.s").alias(_ROUTE)))
-        shuffle_key = F.col(_ROUTE)
+        shuffle_key, order = F.col(_ROUTE), [F.col(_ROUTE), F.col("_sktier")]
     else:
         shuffle_key = route_expr(n_shards)
-    if route:
-        routed = hashed.repartition(partitions, shuffle_key)
-        cap_div = 1
-    else:
-        routed = hashed.coalesce(partitions)
-        partitions = routed.rdd.getNumPartitions()
-        cap_div = max(partitions, 1)
+        order = [shuffle_key]
+    routed = (hashed.repartition(partitions, shuffle_key)
+              .sortWithinPartitions(*order, "_skh_a", "_skh_b"))
 
-    fingerprint = build_fingerprint(cfg, n_shards, m0, partitions, col,
-                                    f"{input_id}|route={int(route)}")
-    completed = completed_partitions(checkpoint_dir, fingerprint)
-    fn = _build_partition_fn(cfg, n_shards, m0, checkpoint_dir, fingerprint, completed, cap_div)
+    fingerprint = build_fingerprint(cfg, n_shards, m0, partitions, col, input_id)
+    completed = completed_partitions(checkpoint_dir, fingerprint, cfg, n_shards, m0)
+    fn = _build_partition_fn(cfg, n_shards, m0, checkpoint_dir, fingerprint, completed)
     states = routed.mapInArrow(fn, _STATE_SCHEMA)
     info = {"n_shards": n_shards, "partitions": partitions, "m0": m0,
             "fingerprint": fingerprint, "resumed_partitions": sorted(completed)}
@@ -790,15 +875,15 @@ def build_bloom_states(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig()
 def build_bloom(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig(),
                 n_shards: int | None = None, partitions: int | None = None,
                 expected_keys: int | None = None, checkpoint_dir: str | None = None,
-                input_id: str = "", enforce_key_limit: bool = True, route: bool = True,
+                input_id: str = "", enforce_key_limit: bool = True,
                 merge: str = "auto") -> BloomFilterState:
     """Build and OR-merge into a single driver-side filter.
 
     The per-shard blobs are collected once (one Spark job) and folded
     linearly on the driver, each parsed once and merged in place, so the
-    fold costs O(filter size) at any shard count.  Routed shards are
-    disjoint, so the fold mostly adopts shards; bits OR only where partials
-    overlap (``route=False``).  ``merge`` accepts ``"auto"`` and ``"driver"``,
+    fold costs O(filter size) at any shard count.  Each shard comes from
+    one task, so the fold adopts shards and ORs no bits.  ``merge`` accepts
+    ``"auto"`` and ``"driver"``,
     which both mean this fold; any other value raises ``ValueError``.  For
     a filter too big for driver memory, never collect it: use
     :func:`build_bloom_states` + :func:`membership_join`."""
@@ -806,7 +891,7 @@ def build_bloom(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig(),
         raise ValueError(f"merge={merge!r}: build_bloom has one merge, the driver fold "
                          "('auto' or 'driver')")
     states, info = build_bloom_states(df, col, cfg, n_shards, partitions, expected_keys,
-                                      checkpoint_dir, input_id, enforce_key_limit, route)
+                                      checkpoint_dir, input_id, enforce_key_limit)
     acc = BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
     for row in states.select("state").collect():
         acc.merge(BloomFilterState.from_bytes(row[0]))
@@ -1087,10 +1172,7 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
                     st = BloomFilterState.from_bytes(blobs[i0].as_py())
                     st_shard = sid
                 t = int(tier_col[i0])
-                x1 = np.uint64(HASH_SEED_SELECTION[2 + 2 * t])
-                x2 = np.uint64(HASH_SEED_SELECTION[3 + 2 * t])
-                h1t = splitmix64(to_u64(h1_all[rows]) ^ x1)
-                h2t = splitmix64(to_u64(h2_all[rows]) ^ x2)
+                h1t, h2t = tier_hashes(h1_all[rows], h2_all[rows], t)
                 result[rows] = st._probe_tier(t, shard_col[rows], h1t, h2t,
                                               np.ones(rows.size, dtype=bool))
             yield pa.RecordBatch.from_arrays(
@@ -1144,10 +1226,10 @@ class GroupBloom:
                                 for _ in range(self.cfg.tiers)]
 
     def update_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        tier_h = derive_tier_hashes(h1, h2, self.state.tiers)
-        self.state._layout = self.state._index = None  # the insert may open levels
-        _insert_batch(self.state.shards[0], tier_h, self.state.m0,
-                      self.state.threshold, self.state.rehash, self.cap_div)
+        st = self.state
+        st._layout = st._index = None  # the insert may open levels
+        for t, (a, b) in enumerate(derive_tier_hashes(h1, h2, st.tiers)):
+            _insert_arrivals(st.shards[0][t], a, b, st.m0, st.threshold, st.rehash, self.cap_div)
 
     def merge(self, other: "GroupBloom") -> "GroupBloom":
         self.state.merge(other.state)

@@ -7,8 +7,11 @@ source table *is* the replayable log, so checkpointing only needs the
 fingerprint (config + geometry + input id), and row count.  A killed build
 re-run with the same fingerprint replays completed partitions from their
 blobs without consuming their input splits (north_rule: "resumable from
-checkpoint with per-partition lineage + metrics") — see
-``bloom._build_partition_fn`` for the task-side write/skip logic.
+checkpoint with per-partition lineage + metrics").  Each meta records its
+blob's length and digest, and a partition replays only if the blob still
+matches them and the build's geometry — see ``bloom._write_checkpoint``
+for the task-side write order and ``bloom.completed_partitions`` for the
+check.
 """
 
 from __future__ import annotations

@@ -143,14 +143,14 @@ def derive_tier_hashes(h1: np.ndarray, h2: np.ndarray, tiers: int) -> list[tuple
     full 128-bit (h1, h2) collision, exactly as with independent seeds.
     The tier seeds reuse the reference's seed table entries [2..7]
     (/root/reference/src/filter.rs:485-487) as XOR constants."""
-    h1 = to_u64(h1)
-    h2 = to_u64(h2)
-    out = []
-    for t in range(tiers):
-        x1 = np.uint64(HASH_SEED_SELECTION[2 + 2 * t])
-        x2 = np.uint64(HASH_SEED_SELECTION[3 + 2 * t])
-        out.append((splitmix64(h1 ^ x1), splitmix64(h2 ^ x2)))
-    return out
+    return [tier_hashes(h1, h2, t) for t in range(tiers)]
+
+
+def tier_hashes(h1: np.ndarray, h2: np.ndarray, t: int) -> tuple[np.ndarray, np.ndarray]:
+    """Tier ``t``'s (h1_t, h2_t) pair alone (see :func:`derive_tier_hashes`)."""
+    x1 = np.uint64(HASH_SEED_SELECTION[2 + 2 * t])
+    x2 = np.uint64(HASH_SEED_SELECTION[3 + 2 * t])
+    return splitmix64(to_u64(h1) ^ x1), splitmix64(to_u64(h2) ^ x2)
 
 
 def derive_shard(h1_i64: np.ndarray, n_shards: int) -> np.ndarray:
@@ -184,12 +184,19 @@ def set_bits(bits: np.ndarray, idx: np.ndarray) -> None:
 
     Counterpart of the reference's ``bloom_insert`` atomic ``fetch_or``
     (/root/reference/src/filter.rs:316-333) — no atomics needed because a
-    Spark partition is single-threaded.  Uses sort + ``reduceat`` segment-OR
-    instead of ``np.bitwise_or.at`` (the buffered ufunc ``.at`` is ~20×
-    slower)."""
-    flat = np.sort(idx.ravel())
-    if flat.size == 0:
+    Spark partition is single-threaded.  One unsorted OR-scatter comes
+    first; where several indices share a word only one write lands, so the
+    bits still unset after it get a sort + ``reduceat`` segment-OR
+    (``np.bitwise_or.at``, the buffered ufunc ``.at``, is ~20× slower).
+    Fastest on a few thousand rows per call, as the build kernel calls it."""
+    flat = idx.ravel()
+    words = flat >> np.uint64(6)
+    masks = np.uint64(1) << (flat & np.uint64(63))
+    bits[words] |= masks
+    lost = (bits[words] & masks) == 0
+    if not lost.any():
         return
+    flat = np.sort(flat[lost])
     words = flat >> np.uint64(6)
     masks = np.uint64(1) << (flat & np.uint64(63))
     starts = np.concatenate(([0], np.flatnonzero(np.diff(words)) + 1))

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from sparksketch.bloom import (
     BloomFilterState,
     Level,
-    _insert_tier,
+    _insert_arrivals,
     build_bloom,
     build_bloom_states,
     hash_probe_cols,
@@ -171,19 +171,25 @@ def test_merge_rejects_geometry_mismatch(spark):
         a.merge(b)
 
 
+def _multi_level_keys(spark, strict: bool):
+    """The default 4096 shards with multi-level shard-tiers: a config with
+    107 keys per level 0 (InitialCapacity.LOW + Accuracy.HIGH) and keys over
+    every shard, plus ~240 keys in each of shards 0..7 (by the build's own
+    routing hash), past level 0's capacity.  The keys come cached."""
+    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
+                      strict_parity=strict)
+    assert cfg.shards == 4096 and expected_n(cfg.m0, cfg.threshold) == 107
+    hot = (_keys_df(spark, 20_000, 1_000_000).select("key", *hash_probe_cols("key"))
+           .where(route_expr(cfg.shards) < 8).select("key"))
+    return cfg, _keys_df(spark, 0, 20_000).union(hot).cache()
+
+
 @pytest.mark.parametrize("strict", [False, True])
 def test_merge_law_default_shards_multi_level(spark, strict):
     """The merge laws at the default 4096 shards with multi-level
     shard-tiers: the build's fold equals a shuffled-order fold of the
     per-shard blobs, and merge='driver' is the same fold."""
-    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
-                      strict_parity=strict)
-    assert cfg.shards == 4096 and expected_n(cfg.m0, cfg.threshold) == 107
-    # keys over every shard, plus ~240 keys in each of shards 0..7 (by the
-    # build's own routing hash): past level 0's 107-key capacity
-    hot = (_keys_df(spark, 20_000, 1_000_000).select("key", *hash_probe_cols("key"))
-           .where(route_expr(cfg.shards) < 8).select("key"))
-    df = _keys_df(spark, 0, 20_000).union(hot).cache()
+    cfg, df = _multi_level_keys(spark, strict)
     state = build_bloom(df, "key", cfg, partitions=4)
     assert max(len(t) for c in state.shards.values() for t in c) >= 2
     assert with_membership(df, "key", state).filter(~F.col("is_member")).count() == 0
@@ -202,6 +208,23 @@ def test_merge_law_default_shards_multi_level(spark, strict):
     assert build_bloom(df, "key", cfg, partitions=4, merge="driver").to_bytes() == blob
     with pytest.raises(ValueError):
         build_bloom(df, "key", cfg, partitions=4, merge="tree")
+    df.unpersist()
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_build_is_a_function_of_the_distinct_keys(spark, strict):
+    """At 4096 shards with multi-level shard-tiers, shuffled rows, another
+    input partitioning and every key twice all build the same bytes, and
+    key_count is the distinct count."""
+    cfg, df = _multi_level_keys(spark, strict)
+    n = df.count()
+    state = build_bloom(df, "key", cfg, partitions=4)
+    assert max(len(t) for c in state.shards.values() for t in c) >= 2
+    assert state.key_count == n
+    for variant in (df.orderBy(F.rand(11)), df.repartition(3), df.union(df)):
+        again = build_bloom(variant, "key", cfg, partitions=4)
+        assert again.to_bytes() == state.to_bytes()
+        assert again.key_count == n
     df.unpersist()
 
 
@@ -425,11 +448,7 @@ def strict_default_geometry(spark):
     shard-tiers (InitialCapacity.LOW + Accuracy.HIGH: 107 keys per level 0,
     ~240 keys routed to each of shards 0..7): its per-shard states table,
     its driver fold and the inserted keys."""
-    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
-                      strict_parity=True)
-    hot = (_keys_df(spark, 20_000, 1_000_000).select("key", *hash_probe_cols("key"))
-           .where(route_expr(cfg.shards) < 8).select("key"))
-    df = _keys_df(spark, 0, 20_000).union(hot).cache()
+    cfg, df = _multi_level_keys(spark, True)
     states = build_bloom_states(df, "key", cfg, partitions=4)[0].cache()
     state = BloomFilterState.empty(cfg, cfg.shards)
     for r in states.collect():
@@ -515,7 +534,7 @@ def _partial(n_keys: int, n_shards: int, strict: bool, seed: int):
                 cascade = state.shards.setdefault(
                     int(sid), [[Level.fresh(0, 64, cfg.threshold)] for _ in range(cfg.tiers)])
                 rows = sids == sid
-                _insert_tier(cascade[t], th1[rows], th2[rows], 64, cfg.threshold, cfg.rehash)
+                _insert_arrivals(cascade[t], th1[rows], th2[rows], 64, cfg.threshold, cfg.rehash)
     return state, h1, h2
 
 
@@ -685,24 +704,6 @@ def test_strict_membership_join_matches_broadcast(spark):
     assert all(via_join[str(k)] for k in range(2500, 5000))  # zero FN
 
 
-# ---------------- scan-local (route=False) mode ----------------
-
-def test_scan_local_build_zero_fn_both_modes(spark):
-    """route=False (no shuffle, 1/P-capacity sub-levels OR-merged) must give
-    the same guarantees as the routed build, in default AND strict mode."""
-    df = _keys_df(spark, 0, 8000)
-    absent = _keys_df(spark, 50_000, 80_000)
-    for cfg in (BloomConfig(), BloomConfig(strict_parity=True)):
-        state = build_bloom(df, "key", cfg, n_shards=16, partitions=4,
-                            expected_keys=8000, route=False)
-        assert state.strict == cfg.strict_parity
-        assert state.key_count == 8000
-        flagged = with_membership(df, "key", state)
-        assert flagged.filter(~F.col("is_member")).count() == 0  # zero FN
-        fp = with_membership(absent, "key", state).filter("is_member").count()
-        assert fp <= 30_000 * 0.01  # far looser than the bound; catches blowups
-
-
 def test_empty_input_builds_empty_filter(spark):
     empty = _keys_df(spark, 0, 0)
     for cfg in (BloomConfig(), BloomConfig(strict_parity=True)):
@@ -756,9 +757,8 @@ def test_estimate_distinct_from_fill(spark):
     ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet") \
         .filter("user_id IS NOT NULL")
     exact = ev.select("user_id").distinct().count()
-    # 2x-insertions headroom keeps every cascade single-level: at exactly
-    # ev.count() capacity the full build opens a second level and re-counts
-    # re-inserted duplicate keys (the documented caveat)
+    # 2x-insertions headroom keeps every cascade single-level, so the
+    # split builds below fill the same single level as the full build
     cap = 2 * ev.count()
     st = build_bloom(ev, "user_id", BloomConfig(), n_shards=32, partitions=8,
                      expected_keys=cap)

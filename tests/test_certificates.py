@@ -48,3 +48,23 @@ def test_degeneracy_checker_positive_controls():
                "false_negatives": 0}])
     # non-certificate results only need rows
     assert not degeneracy_problems("q", [{"a": 0}])
+
+
+def test_gate_removes_only_dead_pid_dirs(tmp_path):
+    """The BM25 gate's cleanup: sibling dirs of exited processes go, the
+    dirs of live processes (the caller's own included) and unrelated
+    names stay."""
+    import subprocess
+    import sys
+
+    from __spark_entry__ import _remove_dead_pid_dirs
+
+    done = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    dead = int(done.stdout)
+    names = [f"gate_{os.getpid()}", f"gate_{os.getppid()}", f"gate_{dead}", "gate_x1",
+             f"other_{dead}", f"gate_{10**30}"]
+    for name in names:
+        (tmp_path / name / "part").mkdir(parents=True)
+    _remove_dead_pid_dirs(str(tmp_path), "gate_")
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(set(names) - {f"gate_{dead}"})

@@ -2,13 +2,18 @@
 blob is identical, and a changed fingerprint invalidates old state
 (SURVEY.md §5.2 item 6)."""
 
+import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
-from sparksketch.bloom import build_bloom, build_fingerprint, completed_partitions, resolve_m0
+from sparksketch.bloom import (BloomFilterState, Level, _write_checkpoint, build_bloom,
+                               build_bloom_states, build_fingerprint, completed_partitions,
+                               hash_probe_cols, resolve_m0, route_expr)
 from sparksketch.checkpoint import checkpoint_metas, clear_checkpoint, load_state, save_state
-from sparksketch.config import Accuracy, BloomConfig
+from sparksketch.config import Accuracy, BloomConfig, InitialCapacity
 
 
 def _keys(spark, n):
@@ -32,7 +37,7 @@ def test_checkpoint_write_and_resume_identical(spark, tmp_path):
     for pid in (1, 4, 6):
         os.remove(os.path.join(chk, f"part-{pid:05d}.bin"))
         os.remove(os.path.join(chk, f"part-{pid:05d}.meta.json"))
-    assert len(completed_partitions(chk, fp)) == 5
+    assert len(completed_partitions(chk, fp, cfg, 16, resolve_m0(cfg, 16, None))) == 5
 
     resumed = build_bloom(df, "key", cfg, n_shards=16, partitions=8,
                           checkpoint_dir=chk, input_id="keys8000")
@@ -53,7 +58,7 @@ def test_fingerprint_changes_invalidate(spark, tmp_path):
                 checkpoint_dir=chk, input_id="a")
     # a different input_id must not reuse those checkpoints
     other_fp = build_fingerprint(cfg, 16, m0, 8, "key", "b")
-    assert completed_partitions(chk, other_fp) == frozenset()
+    assert completed_partitions(chk, other_fp, cfg, 16, m0) == frozenset()
 
 
 def test_strict_parity_checkpoint_resume_identical(spark, tmp_path):
@@ -75,6 +80,83 @@ def test_strict_parity_checkpoint_resume_identical(spark, tmp_path):
     m0 = resolve_m0(cfg, 8, None)
     assert (build_fingerprint(cfg, 8, m0, 4, "key", "x")
             != build_fingerprint(BloomConfig(), 8, m0, 4, "key", "x"))
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_resume_replays_only_blobs_their_meta_vouches_for(spark, tmp_path, strict):
+    """Crash states of a checkpointed build at 4096 shards with multi-level
+    shard-tiers.  Build F2 shares F1's geometry and differs only in its
+    input, so its partition blobs decode cleanly under F1's fingerprint; a
+    resume of F1 must rebuild every partition whose blob its meta does not
+    vouch for, and come out byte-identical to a clean build."""
+    cfg = BloomConfig(initial_capacity=InitialCapacity.LOW, accuracy=Accuracy.HIGH,
+                      strict_parity=strict)
+    hot = (_keys(spark, 1_000_000).select("key", *hash_probe_cols("key"))
+           .where(route_expr(cfg.shards) < 8).select("key"))
+    f1 = _keys(spark, 20_000).union(hot.limit(2000)).cache()
+    f2 = spark.range(50_000, 70_000).select(F.col("id").cast("string").alias("key"))
+    clean = build_bloom(f1, "key", cfg, partitions=4)
+    assert max(len(t) for c in clean.shards.values() for t in c) >= 2
+    chk1, chk2 = str(tmp_path / "f1"), str(tmp_path / "f2")
+    build_bloom(f1, "key", cfg, partitions=4, checkpoint_dir=chk1, input_id="F1")
+    build_bloom(f2, "key", cfg, partitions=4, checkpoint_dir=chk2, input_id="F2")
+
+    def part(d, pid, ext):
+        return os.path.join(d, f"part-{pid:05d}.{ext}")
+
+    # pid 0: F2 died after replacing its .bin, before its meta, under a
+    # meta F1 left (the write order before the old meta was dropped first)
+    shutil.copy(part(chk2, 0, "bin"), part(chk1, 0, "bin"))
+    # pid 1, the reverse: F2 died after dropping the old meta, before
+    # replacing the .bin, which is still F1's
+    os.remove(part(chk1, 1, "meta.json"))
+    # pid 2: F2 dropped the old meta and replaced the .bin, then died
+    os.remove(part(chk1, 2, "meta.json"))
+    shutil.copy(part(chk2, 2, "bin"), part(chk1, 2, "bin"))
+    # pid 3: intact, beside stale temporaries of a task that died writing
+    for tmp in (".part-00003.tmp", ".part-00003.meta.tmp"):
+        with open(os.path.join(chk1, tmp), "wb") as f:
+            f.write(b"partial")
+
+    states, info = build_bloom_states(f1, "key", cfg, partitions=4, checkpoint_dir=chk1,
+                                      input_id="F1")
+    assert info["resumed_partitions"] == [3]
+    acc = BloomFilterState.empty(cfg, cfg.shards, info["m0"])
+    for r in states.collect():
+        acc.merge(BloomFilterState.from_bytes(r.state))
+    assert acc.to_bytes() == clean.to_bytes()
+    resumed = build_bloom(f1, "key", cfg, partitions=4, checkpoint_dir=chk1, input_id="F1")
+    assert resumed.to_bytes() == clean.to_bytes()
+    assert sorted(m["pid"] for m in checkpoint_metas(chk1)) == [0, 1, 2, 3]
+    f1.unpersist()
+
+
+def test_completed_partitions_skips_malformed_metas(tmp_path):
+    """A meta is trusted only if it is a well-formed dict for its own file
+    name, with this build's fingerprint, and the blob has its length,
+    digest and this build's geometry; anything else is skipped, never
+    raised."""
+    chk, cfg = str(tmp_path), BloomConfig()
+    st = BloomFilterState.empty(cfg, 8)
+    st.shards[3] = [[Level.fresh(0, cfg.m0, cfg.threshold)] for _ in range(cfg.tiers)]
+    _write_checkpoint(chk, 0, st, 1, "fp")
+    assert completed_partitions(chk, "fp", cfg, 8, cfg.m0) == {0}
+    assert completed_partitions(chk, "fp", cfg, 16, cfg.m0) == frozenset()
+    assert completed_partitions(chk, "fp", cfg, 8, 2 * cfg.m0) == frozenset()
+    assert completed_partitions(chk, "fp", BloomConfig(strict_parity=True), 8, cfg.m0) == frozenset()
+    with open(os.path.join(chk, "part-00000.meta.json")) as f:
+        good = json.load(f)
+    bad = [[], "x", 3, None, {}, {**good, "pid": "0"}, {**good, "pid": True},
+           {**good, "pid": 1}, {**good, "pid": -1}, {**good, "bytes": good["bytes"] + 1},
+           {**good, "blake2b": "0" * 16}, {k: v for k, v in good.items() if k != "blake2b"},
+           {k: v for k, v in good.items() if k != "fingerprint"}]
+    for meta in bad:
+        with open(os.path.join(chk, "part-00000.meta.json"), "w") as f:
+            json.dump(meta, f)
+        assert completed_partitions(chk, "fp", cfg, 8, cfg.m0) == frozenset(), meta
+    with open(os.path.join(chk, "part-00000.meta.json"), "w") as f:
+        f.write("{not json")
+    assert completed_partitions(chk, "fp", cfg, 8, cfg.m0) == frozenset()
 
 
 def test_default_input_id_from_input_files(spark, tmp_path):

@@ -5,13 +5,14 @@ corners the example tests don't."""
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparksketch.bloom import BloomFilterState, Level, _insert_batch, blob_geometry
+from sparksketch.bloom import BloomFilterState, Level, _insert_arrivals, blob_geometry
 from sparksketch.cms import CMS
-from sparksketch.config import BloomConfig, expected_n, optimal_k
+from sparksketch.config import Accuracy, BloomConfig, expected_n, optimal_k
 from sparksketch.hashing import derive_shard, derive_tier_hashes, km_indices, set_bits, spark_xxhash64, xxh64
 from sparksketch.hashing import test_bits as check_bits
 from sparksketch.hll import HLL
@@ -49,6 +50,22 @@ def test_km_indices_in_range(k, log_m):
     assert check_bits(bits, idx).all()  # zero false negatives at kernel level
 
 
+@given(st.integers(min_value=1, max_value=8), st.integers(min_value=0, max_value=3000),
+       st.integers(min_value=0, max_value=2**32))
+@settings(max_examples=60, deadline=None)
+def test_set_bits_matches_scalar_or(n_words, n_idx, seed):
+    """set_bits ORs every index's bit in, however many indices share a word
+    (a few words, thousands of indices: most writes collide)."""
+    rng = np.random.default_rng(seed)
+    bits = rng.integers(0, 2**64, n_words, dtype=np.uint64) & rng.integers(0, 2**64, n_words, dtype=np.uint64)
+    idx = rng.integers(0, 64 * n_words, n_idx, dtype=np.uint64).reshape(-1, 1)
+    want = [int(w) for w in bits]
+    for i in idx.ravel().tolist():
+        want[i // 64] |= 1 << (i % 64)
+    set_bits(bits, idx)
+    assert [int(w) for w in bits] == want
+
+
 # ---------------- geometry (reference formula parity) ----------------
 
 @given(st.integers(min_value=8, max_value=26), st.sampled_from([12.0, 15.0, 19.0]))
@@ -81,7 +98,8 @@ def test_bloom_merge_order_invariance(keys, n_parts, rnd):
                 h1 = np.array([spark_xxhash64(str(k), 100 + t) for k in part_keys], dtype=np.uint64)
                 h2 = np.array([spark_xxhash64(str(k), 200 + t) for k in part_keys], dtype=np.uint64)
                 hs.append((h1, h2))
-            _insert_batch(st_.shards[0], hs, cfg.m0, cfg.threshold, cfg.rehash)
+            for levels, (h1, h2) in zip(st_.shards[0], hs):
+                _insert_arrivals(levels, h1, h2, cfg.m0, cfg.threshold, cfg.rehash)
         return st_
 
     parts = [list() for _ in range(n_parts)]
@@ -115,8 +133,8 @@ def _cascade_state(n_keys: int, n_shards: int, strict: bool, seed: int) -> Bloom
     for sid in np.unique(sids):
         rows = sids == sid
         cascade = [[Level.fresh(0, 64, cfg.threshold)] for _ in range(cfg.tiers)]
-        _insert_batch(cascade, derive_tier_hashes(h1[rows], h2[rows], cfg.tiers),
-                      64, cfg.threshold, cfg.rehash)
+        for levels, (th1, th2) in zip(cascade, derive_tier_hashes(h1[rows], h2[rows], cfg.tiers)):
+            _insert_arrivals(levels, th1, th2, 64, cfg.threshold, cfg.rehash)
         st_.shards[int(sid)] = cascade
     return st_
 
@@ -223,6 +241,94 @@ def test_bloom_merge_rejects_level_geometry_mismatch():
     b.shards[sid][0][0] = Level(lv.idx, lv.m, lv.k + 1, lv.n, lv.bits)
     with pytest.raises(ValueError):
         a.merge(b)
+
+
+# ---------------- bloom build kernel ----------------
+
+def _oracle_build(h1, h2, cfg: BloomConfig, n_shards: int, m0: int) -> BloomFilterState:
+    """Scalar reference build, one key at a time: per (shard, tier), sort
+    the distinct (h1, h2) pairs, give the key of rank r the first level
+    whose cumulative capacity exceeds r (only level 0 without rehash), and
+    set its k bits there."""
+    groups: dict[tuple[int, int], set] = {}
+    for a, b in zip(h1.tolist(), h2.tolist()):
+        routes = [a % n_shards, b % n_shards]
+        for t in range(cfg.tiers):
+            sids = ([routes[t], (routes[t] + (n_shards - 1) // 2) % n_shards]
+                    if cfg.strict_parity else [routes[0]])
+            for sid in sids:
+                groups.setdefault((sid, t), set()).add((a, b))
+    state = BloomFilterState(cfg.tiers, n_shards, m0, cfg.threshold, cfg.rehash,
+                             strict=cfg.strict_parity)
+    for sid in sorted({sid for sid, _ in groups}):
+        state.shards[sid] = []
+        for t in range(cfg.tiers):
+            levels = [Level.fresh(0, m0, cfg.threshold)]
+            for rank, (a, b) in enumerate(sorted(groups.get((sid, t), ()))):
+                idx, room = 0, max(expected_n(m0, cfg.threshold), 1)
+                while cfg.rehash and rank >= room:
+                    idx += 1
+                    room += max(expected_n(m0 << idx, cfg.threshold), 1)
+                while len(levels) <= idx:
+                    levels.append(Level.fresh(len(levels), m0, cfg.threshold))
+                th1, th2 = derive_tier_hashes(np.array([a]), np.array([b]), cfg.tiers)[t]
+                set_bits(levels[idx].bits, km_indices(th1, th2, levels[idx].k, levels[idx].m))
+                levels[idx].n += 1
+            state.shards[sid].append(levels)
+    return state
+
+
+def _sorted_batches(h1, h2, cfg: BloomConfig, n_shards: int, cuts: list[int]):
+    """The build's input rows in the order the build sorts them, cut into
+    Arrow batches at ``cuts``: (shard, h1, h2), or (shard, tier, h1, h2)
+    for strict rows exploded to their (shard, tier) insert targets."""
+    if cfg.strict_parity:
+        off = (n_shards - 1) // 2
+        r = [derive_shard(h1, n_shards), derive_shard(h2, n_shards)]
+        shard = np.concatenate([r[0], (r[0] + off) % n_shards, r[1], (r[1] + off) % n_shards])
+        tier = np.repeat([0, 0, 1, 1], h1.size)
+        h1, h2 = np.tile(h1, 4), np.tile(h2, 4)
+        order = np.lexsort((h2, h1, tier, shard))
+        cols = {"_skh_a": h1, "_skh_b": h2, "_sktier": tier.astype(np.int32), "_skshard": shard}
+    else:
+        order = np.lexsort((h2, h1, derive_shard(h1, n_shards)))
+        cols = {"_skh_a": h1, "_skh_b": h2}
+    table = pa.table({k: v[order] for k, v in cols.items()})
+    bounds = [0, *sorted(c % (table.num_rows + 1) for c in cuts), table.num_rows]
+    return [table.slice(a, b - a).to_batches()[0] if b > a
+            else pa.RecordBatch.from_pydict({k: pa.array([], table.schema.field(k).type) for k in cols})
+            for a, b in zip(bounds, bounds[1:])]
+
+
+@given(st.integers(min_value=1, max_value=150), st.integers(min_value=0, max_value=150),
+       st.sampled_from([4, 8, 16]), st.booleans(), st.booleans(), st.sampled_from([1, 2, 3]),
+       st.sampled_from(list(Accuracy)), st.lists(st.integers(min_value=0), max_size=6),
+       st.integers(min_value=0, max_value=2**32))
+@settings(max_examples=60, deadline=None)
+def test_build_kernel_matches_scalar_oracle(n_keys, n_dups, n_shards, strict, rehash, tiers,
+                                            accuracy, cuts, seed):
+    """The build kernel over sorted rows, cut into batches anywhere (a
+    duplicate or a shard may straddle a cut), gives the oracle's filter
+    byte for byte, and ``key_count`` is the distinct count."""
+    from sparksketch.bloom import _build_partition_fn
+
+    cfg = BloomConfig(accuracy=accuracy, strict_parity=strict, rehash=rehash,
+                      tiers=2 if strict else tiers)
+    rng = np.random.default_rng(seed)
+    keys = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, (n_keys, 2), dtype=np.int64)
+    rows = np.concatenate([keys, keys[rng.integers(0, n_keys, n_dups)]])
+    h1, h2 = rows[:, 0].copy(), rows[:, 1].copy()
+    want = _oracle_build(h1, h2, cfg, n_shards, 64)
+
+    fn = _build_partition_fn(cfg, n_shards, 64, None, None, frozenset())
+    got = BloomFilterState(cfg.tiers, n_shards, 64, cfg.threshold, cfg.rehash, strict=strict)
+    for batch in fn(iter(_sorted_batches(h1, h2, cfg, n_shards, cuts))):
+        for sid, blob in zip(batch.column("shard").to_pylist(), batch.column("state").to_pylist()):
+            part = BloomFilterState.from_bytes(blob)
+            assert list(part.shards) == [sid]
+            got.merge(part)
+    assert got.to_bytes() == want.to_bytes()
+    assert got.key_count == n_keys
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=0, max_size=500))

@@ -42,8 +42,11 @@ def test_stream_bloom_fold(spark, tmp_path):
 
     state = read_bloom_state(state_dir)
     assert state is not None
-    n_rows = src.count()
-    assert state.key_count == n_rows  # every micro-batch folded exactly once
+    # a build counts its distinct keys and the fold adds builds, so folding
+    # every micro-batch (one file each) exactly once sums per-file distincts
+    per_file = (spark.read.parquet(out).groupBy(F.input_file_name())
+                .agg(F.countDistinct("user_id").alias("n")))
+    assert state.key_count == per_file.agg(F.sum("n")).first()[0]
     users = [str(r.user_id) for r in src.select("user_id").distinct().collect()]
     assert all(state.contains(u) for u in users)  # zero FN across batches
     assert not state.contains("definitely-not-a-user")
