@@ -1032,14 +1032,17 @@ def _compact_roundtrip_docs(spark: SparkSession, sf: str) -> DataFrame:
     # the compacted copy back and return (doc_id, n_chars) — the oracle
     # reads the ORIGINAL table, so the hash match proves the rewrite is
     # lossless row-for-row.
-    import os
+    import tempfile
 
     from sparksketch.layout import compact_files, dir_bytes
     src = os.path.join(sf, "documents.parquet")
     # pid-scoped sink: a concurrent gate run at the same SF (driver +
-    # check_oracle) must not race on one directory
-    dst = (f"/tmp/sparksketch_gate/compact_"
-           f"{os.path.basename(sf.rstrip('/'))}_{os.getpid()}")
+    # check_oracle) must not race on one directory.  The live dir stays
+    # (the returned lazy DataFrame reads it); siblings of runs whose
+    # process has exited are removed before writing.
+    prefix = f"sparksketch_gate_compact_{os.path.basename(sf.rstrip('/'))}_"
+    _remove_dead_pid_dirs(tempfile.gettempdir(), prefix)
+    dst = os.path.join(tempfile.gettempdir(), f"{prefix}{os.getpid()}")
     target = max(1, round(dir_bytes(spark, src) / 2 ** 20 / 4))
     compact_files(spark, src, dst, target_mb=target)
     return spark.read.parquet(dst).select("doc_id", "n_chars")

@@ -6,10 +6,10 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
 - **Shard routing** — every key is routed to one of ``n_shards`` logical
   shards by a seeded JVM hash (``pmod(xxhash64(key, seed[0]), n_shards)``),
   the Spark analogue of the reference's shard vector + jump-hash routing
-  (filter.rs:120-137).  Jump consistent hash is only needed to *resize a live
-  shard vector*, which the reference never does (shard count is fixed after
-  init, filter.rs:190), so ``pmod`` is equivalent for fixed n — documented
-  deviation.  All rows of a shard land in one partition
+  (filter.rs:120-137).  The library has no jump hash: it only pays off when
+  a live shard vector is *resized*, which the reference never does (shard
+  count is fixed after init, filter.rs:190), so ``pmod`` routes alike for a
+  fixed n — documented deviation.  All rows of a shard land in one partition
   (``repartition(P, shard_id)``), so each shard is built by exactly one task
   with exact local capacities and no atomics (the reference needs
   ``AtomicU64::fetch_or`` because shards are concurrently written,
@@ -36,23 +36,29 @@ Architecture (Spark-first re-derivation of /root/reference/src/filter.rs):
   The shuffle carries only two int64 base hashes per row (16 B) — shard id
   and per-tier KM pairs are derived in-kernel via splitmix64 — never the
   key text; at 100 TB input the shuffle is ~GBs.
+- **Layout** — in memory a filter is, per (tier, level index), one table:
+  a uint64 words array with a row per shard that holds the level, plus
+  int64[n_shards] row numbers (-1 where a shard-tier lacks the level) and
+  key counts (:class:`BloomFilterState`).  The build scatters into it, the
+  probe gathers from it and a merge ORs into it; there is no second copy.
 - **Build** — shard Exchange → external sort → one Arrow kernel per task,
-  one scatter per tier and level index across a batch's shards; a task
-  holds its shards' levels plus one batch (:func:`build_bloom_states`).
-- **Merge** — one in-place fold, :meth:`BloomFilterState.merge`: the driver
-  collects the per-shard byte blobs once, parses each once and merges it in
-  linearly.  Disjoint shards concatenate; same-shard same-level bitsets OR
-  and their key counts add.  A merged level whose fill exceeds capacity is flagged
-  (``overflowed``) — compaction = re-aggregating the source table, which is
-  the distributed replacement for the reference's per-shard WAL
-  (filter.rs:347-371, 490-524): the immutable input table *is* the key log.
+  one scatter per tier and level index across a batch's shards into the
+  task's tables; a task holds its shards' levels plus one batch
+  (:func:`build_bloom_states`).
+- **Merge** — :meth:`BloomFilterState.from_blobs` decodes any number of
+  blobs into one filter in one pass: the driver's fold of a build's
+  per-shard blobs, a checkpoint replay, the per-shard fold of a states
+  table.  :meth:`BloomFilterState.merge` ORs one filter's tables into
+  another's, one vectorised OR per tier and level index.  Same-shard
+  same-level bitsets OR and their key counts add.  A merged level whose
+  fill exceeds capacity is flagged (``overflowed``) — compaction =
+  re-aggregating the source table, which is the distributed replacement for
+  the reference's per-shard WAL (filter.rs:347-371, 490-524): the immutable
+  input table *is* the key log.
 
-Query paths — both probe through the one flat probe index
-(:meth:`BloomFilterState.contains_hashes`): a single uint64 words buffer
-holding every level's bits, plus per (tier, level index) an int64[n_shards]
-table of word offsets (-1 where a shard-tier lacks the level).  A probe is
+Query paths — both probe the tables (:meth:`BloomFilterState.contains_hashes`):
 one gather per tier and level index, for uniform, mixed-depth and strict
-filters alike; ``from_bytes`` decodes straight into that buffer.
+filters alike.
 
 - :func:`with_membership` — broadcast the (small) filter blob, probe with a
   vectorized pandas UDF over JVM-precomputed hash columns.
@@ -65,12 +71,11 @@ filters alike; ``from_bytes`` decodes straight into that buffer.
 from __future__ import annotations
 
 import hashlib
-import io
 import json
 import math
 import os
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -137,7 +142,9 @@ class Level:
 
     Mirrors the reference's ``Shard`` bit state (filter.rs:279-288):
     ``m`` bits (power of two), ``k`` hash functions, ``n`` keys inserted,
-    packed into a uint64 word array (filter.rs:403-407)."""
+    packed into a uint64 word array (filter.rs:403-407).  A filter holds
+    its levels in tables (:class:`BloomFilterState`); a ``Level`` is one
+    shard's view of one of them, or a hand-built level to construct from."""
 
     idx: int
     m: int
@@ -157,36 +164,49 @@ class Level:
         m, k = cls.geometry(idx, m0, threshold)
         return cls(idx=idx, m=m, k=k, n=0, bits=np.zeros(m // 64, dtype=np.uint64))
 
-    def capacity(self, threshold: float) -> int:
-        return expected_n(self.m, threshold)
-
-    def fill_fpr(self) -> float:
-        """(1 - e^{-kn/m})^k for the *actual* fill — the standard Bloom FPR."""
-        if self.n == 0:
-            return 0.0
-        return (1.0 - math.exp(-self.k * self.n / self.m)) ** self.k
-
-    def copy(self) -> "Level":
-        return Level(self.idx, self.m, self.k, self.n, self.bits.copy())
-
 
 @dataclass
+class _Table:
+    """One (tier, level index) of a filter: shard ``sid``'s bits are row
+    ``row[sid]`` of ``words`` (-1: the shard-tier lacks the level), and
+    ``n[sid]`` keys went into them.  Rows past the last one in use are
+    growth room."""
+
+    row: np.ndarray    # int64[n_shards]
+    n: np.ndarray      # int64[n_shards]
+    words: np.ndarray  # uint64[rows, m // 64], C-contiguous
+
+
 class BloomFilterState:
-    """Driver-side value object for a (possibly partial) filter: a map of
-    shard_id → per-tier level cascades, plus the frozen geometry."""
+    """A (possibly partial) filter: its frozen geometry and, per tier and
+    level index, one :class:`_Table` with a words row per shard that holds
+    the level.  ``tables[t][idx]`` is the filter, its probe index and its
+    merge target; :attr:`shards` is a read view of it by shard.  ``shards``
+    passed in (shard id → per tier a list of :class:`Level`) are copied in.
+    A shard held in any tier holds a level in every tier, as the blob
+    format needs."""
 
-    tiers: int
-    n_shards: int
-    m0: int
-    threshold: float
-    rehash: bool
-    shards: dict[int, list[list[Level]]] = field(default_factory=dict)
-    # strict_parity: the reference's 2-shards-per-tier redundancy
-    # (filter.rs:120-137) — tier t routes by base hash t, keys insert into
-    # p1 and p2=(p1+mask/2)&mask, probes AND all four shard-tier checks
-    strict: bool = False
-
-    # ---------------- construction ----------------
+    def __init__(self, tiers: int, n_shards: int, m0: int, threshold: float, rehash: bool,
+                 shards: dict[int, list[list[Level]]] | None = None, strict: bool = False):
+        self.tiers, self.n_shards, self.m0 = tiers, n_shards, m0
+        self.threshold, self.rehash = threshold, rehash
+        # strict_parity: the reference's 2-shards-per-tier redundancy
+        # (filter.rs:120-137) — tier t routes by base hash t, keys insert into
+        # p1 and p2=(p1+mask/2)&mask, probes AND all four shard-tier checks
+        self.strict = strict
+        self.tables: list[dict[int, _Table]] = [{} for _ in range(tiers)]
+        for sid, cascade in (shards or {}).items():
+            if not 0 <= sid < n_shards or len(cascade) != tiers or not all(cascade):
+                raise ValueError(f"shard {sid}: needs an id below {n_shards} and a level "
+                                 f"in each of {tiers} tiers")
+            for t, levels in enumerate(cascade):
+                for lv in levels:
+                    if (lv.m, lv.k) != Level.geometry(lv.idx, m0, threshold):
+                        raise ValueError(f"shard {sid} tier {t} level {lv.idx}: "
+                                         "(m, k) is not its geometry")
+                    tb = self._grow(t, lv.idx, np.array([sid]))
+                    tb.words[tb.row[sid]] |= lv.bits
+                    tb.n[sid] += lv.n
 
     @classmethod
     def empty(cls, cfg: BloomConfig, n_shards: int, m0: int | None = None) -> "BloomFilterState":
@@ -194,119 +214,200 @@ class BloomFilterState:
                    threshold=cfg.threshold, rehash=cfg.rehash,
                    strict=cfg.strict_parity)
 
+    # ---------------- tables ----------------
+
+    def _levels(self, t: int):
+        """(idx, m, k, table) of tier ``t``, by level index."""
+        for idx, tb in sorted(self.tables[t].items()):
+            yield (idx, *Level.geometry(idx, self.m0, self.threshold), tb)
+
+    def _grow(self, t: int, idx: int, sids: np.ndarray) -> _Table:
+        """Table (t, idx), with a zeroed row added for each shard of the
+        distinct ``sids`` that lacks one.  A new table is allocated to its
+        rows exactly; a full one doubles, so inserts cost O(1) per row."""
+        tb = self.tables[t].get(idx)
+        if tb is None:
+            tb = self.tables[t][idx] = _Table(
+                np.full(self.n_shards, -1, dtype=np.int64), np.zeros(self.n_shards, dtype=np.int64),
+                np.zeros((0, (self.m0 << idx) // 64), dtype=np.uint64))
+        new = sids[tb.row[sids] < 0]
+        if new.size:
+            used = int(tb.row.max()) + 1
+            if used + new.size > len(tb.words):
+                words = np.zeros((max(2 * used, used + new.size), tb.words.shape[1]),
+                                 dtype=np.uint64)
+                words[:used] = tb.words[:used]
+                tb.words = words
+            tb.row[new] = np.arange(used, used + new.size)
+        return tb
+
+    def _place(self, t: int, idx: int, shard: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(flat words of table (t, idx), bit offset of each ``shard``
+        entry's row in it) for one scatter, counting a key per entry."""
+        tb = self._grow(t, idx, np.unique(shard))
+        tb.n += np.bincount(shard, minlength=self.n_shards)
+        return tb.words.reshape(-1), tb.row[shard].astype(np.uint64) * np.uint64(self.m0 << idx)
+
+    def _shard_ids(self) -> np.ndarray:
+        """The ids of the shards the filter holds, in order."""
+        held = np.zeros(self.n_shards, dtype=bool)
+        for tier in self.tables:
+            for tb in tier.values():
+                held |= tb.row >= 0
+        return np.flatnonzero(held)
+
+    def _open(self, sids: np.ndarray) -> None:
+        """Give each of the distinct ``sids`` level 0 in every tier that lacks it."""
+        for t in range(self.tiers):
+            self._grow(t, 0, sids)
+
+    @property
+    def shards(self) -> dict[int, list[list[Level]]]:
+        """Read view: shard id → per tier its levels by index.  Each
+        ``Level.bits`` is a view of its table row, so a write to it reaches
+        the filter; the view goes stale when a merge or insert adds rows."""
+        view = {sid: [[] for _ in range(self.tiers)] for sid in self._shard_ids().tolist()}
+        for t in range(self.tiers):
+            for idx, m, k, tb in self._levels(t):
+                for sid in np.flatnonzero(tb.row >= 0).tolist():
+                    view[sid][t].append(Level(idx, m, k, int(tb.n[sid]), tb.words[tb.row[sid]]))
+        return view
+
     # ---------------- serialization ----------------
 
-    def to_bytes(self) -> bytes:
-        buf = io.BytesIO()
+    def _header(self, n_entries: int) -> bytes:
         # the flags byte occupies what was the V2 pad byte; blobs with any
         # flag set are stamped V3 so a pre-flags reader REJECTS them instead
         # of silently decoding strict=False and probing with default routing
         # (a zero-FN contract break under reader/writer version skew)
         flags = int(self.strict)
-        ver = _VERSION_FLAGS if flags else _VERSION
-        buf.write(struct.pack(_HEADER, _MAGIC, ver, self.tiers, int(self.rehash), flags,
-                               self.n_shards, len(self.shards), self.threshold, self.m0))
-        for sid in sorted(self.shards):
-            buf.write(struct.pack("<I", sid))
-            for tier_levels in self.shards[sid]:
-                buf.write(struct.pack("<H", len(tier_levels)))
-                for lv in tier_levels:
-                    buf.write(struct.pack(_LEVEL, lv.idx, lv.m, lv.k, lv.n))
-                    buf.write(lv.bits.tobytes())
-        return buf.getvalue()
+        return struct.pack(_HEADER, _MAGIC, _VERSION_FLAGS if flags else _VERSION, self.tiers,
+                           int(self.rehash), flags, self.n_shards, n_entries, self.threshold,
+                           self.m0)
+
+    def _entries(self):
+        """(shard id, the shard's blob entry as a list of byte buffers) of
+        every shard held, in id order."""
+        tiers = [[(idx, m, k, tb.row.tolist(), tb.n.tolist(), tb.words)
+                  for idx, m, k, tb in self._levels(t)] for t in range(self.tiers)]
+        for sid in self._shard_ids().tolist():
+            out = [struct.pack("<I", sid)]
+            for levels in tiers:
+                held = [lv for lv in levels if lv[3][sid] >= 0]
+                out.append(struct.pack("<H", len(held)))
+                for idx, m, k, row, n, words in held:
+                    out += (struct.pack(_LEVEL, idx, m, k, n[sid]), words[row[sid]])
+            yield sid, out
+
+    def to_bytes(self) -> bytes:
+        entries = [entry for _, entry in self._entries()]
+        return b"".join([self._header(len(entries)), *(p for entry in entries for p in entry)])
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilterState":
-        """Decode and validate a blob: every malformed blob (truncated,
-        trailing bytes, a tier with no levels, a level whose (m, k) is not
-        its index's geometry, level indices not increasing within a tier,
-        shard ids out of range or not increasing) raises ``ValueError`` instead of decoding into a
-        filter that probes differently.  The bits of every level are copied
-        into one words buffer, which is the probe index's (no second copy)."""
-        tiers, n_shards, n_entries, threshold, rehash, strict, m0 = _parse_header(data)
-        st = cls(tiers=tiers, n_shards=n_shards, m0=m0, threshold=threshold,
-                 rehash=rehash, strict=strict)
-        geometry: dict[int, tuple[int, int]] = {}
-        # the level bits are a subset of the blob, so they fit in len // 8 words
-        words = np.empty(len(data) // 8, dtype=np.uint64)
-        raw, src = memoryview(words).cast("B"), memoryview(data)
-        placed: list[tuple[int, int, int, int]] = []
-        used, off, prev_sid = 0, _HEADER_SIZE, -1
-        try:
-            for _ in range(n_entries):
-                (sid,) = struct.unpack_from("<I", data, off)
-                off += 4
-                if not prev_sid < sid < n_shards:
-                    raise ValueError(f"shard id {sid} out of order or >= n_shards={n_shards}")
-                prev_sid = sid
-                tiers_levels = []
-                for t in range(tiers):
-                    (n_levels,) = struct.unpack_from("<H", data, off)
-                    off += 2
-                    if n_levels == 0:  # no writer emits one; it would probe every key absent
-                        raise ValueError(f"shard {sid} tier {t} has no levels")
-                    levels: list[Level] = []
-                    for _l in range(n_levels):
-                        idx, m, k, n = struct.unpack_from(_LEVEL, data, off)
-                        off += _LEVEL_SIZE
-                        if levels and idx <= levels[-1].idx:
-                            raise ValueError(f"shard {sid} tier {t}: level indices not increasing")
-                        want = geometry.get(idx)
-                        if want is None and idx < 64:  # m is a u64 field
-                            want = geometry[idx] = Level.geometry(idx, m0, threshold)
-                        if (m, k) != want:
-                            raise ValueError(f"shard {sid} tier {t} level {idx}: (m, k) = "
-                                             f"({m}, {k}), geometry says {want}")
-                        if off + m // 8 > len(data):
-                            raise ValueError("truncated sparksketch bloom blob")
-                        raw[used * 8:used * 8 + m // 8] = src[off:off + m // 8]
-                        off += m // 8
-                        levels.append(Level(idx, m, k, n, words[used:used + m // 64]))
-                        placed.append((t, idx, sid, used))
-                        used += m // 64
-                    tiers_levels.append(levels)
-                st.shards[sid] = tiers_levels
-        except struct.error as e:
-            raise ValueError("truncated sparksketch bloom blob") from e
-        if off != len(data):
-            raise ValueError(f"{len(data) - off} trailing bytes after a sparksketch bloom blob")
-        st._layout = words, placed
+        """Decode and validate one blob (:meth:`from_blobs`)."""
+        return cls.from_blobs([data])
+
+    @classmethod
+    def from_blobs(cls, blobs) -> "BloomFilterState":
+        """Decode blobs of one filter geometry into one filter: the decoder,
+        and the fold of a build's shard blobs, of partial states and of a
+        checkpoint.  Levels that several blobs hold for one shard-tier are
+        ORed and their key counts add.  Each table is allocated to its rows
+        exactly, and the bits are copied straight from the blobs.
+
+        Every malformed blob (truncated, trailing bytes, a tier with no
+        levels, a level whose (m, k) is not its index's geometry, level
+        indices not increasing within a tier, shard ids out of range or not
+        increasing) raises ``ValueError`` instead of decoding into a filter
+        that probes differently; so do blobs of different geometries and an
+        empty ``blobs``."""
+        blobs = list(blobs)
+        head, rehash0, geometry = None, False, {}
+        found: dict[tuple[int, int], list[tuple[int, int, int, int]]] = {}  # sid, n, blob, offset
+        for b, data in enumerate(blobs):
+            tiers, n_shards, n_entries, threshold, rehash, strict, m0 = _parse_header(data)
+            if head is None:
+                head, rehash0 = (tiers, n_shards, m0, threshold, strict), rehash
+            elif (tiers, n_shards, m0, threshold, strict) != head:
+                raise ValueError("cannot merge filters with different geometry")
+            off, prev_sid = _HEADER_SIZE, -1
+            try:
+                for _ in range(n_entries):
+                    (sid,) = struct.unpack_from("<I", data, off)
+                    off += 4
+                    if not prev_sid < sid < n_shards:
+                        raise ValueError(f"shard id {sid} out of order or >= n_shards={n_shards}")
+                    prev_sid = sid
+                    for t in range(tiers):
+                        (n_levels,) = struct.unpack_from("<H", data, off)
+                        off += 2
+                        if n_levels == 0:  # no writer emits one; it would probe every key absent
+                            raise ValueError(f"shard {sid} tier {t} has no levels")
+                        prev_idx = -1
+                        for _l in range(n_levels):
+                            idx, m, k, n = struct.unpack_from(_LEVEL, data, off)
+                            off += _LEVEL_SIZE
+                            if idx <= prev_idx:
+                                raise ValueError(f"shard {sid} tier {t}: level indices "
+                                                 "not increasing")
+                            prev_idx = idx
+                            want = geometry.get(idx)
+                            if want is None and idx < 64:  # m is a u64 field
+                                want = geometry[idx] = Level.geometry(idx, m0, threshold)
+                            if (m, k) != want or n >> 63:
+                                raise ValueError(f"shard {sid} tier {t} level {idx}: (m, k, n) = "
+                                                 f"({m}, {k}, {n}), geometry says {want}")
+                            if off + m // 8 > len(data):
+                                raise ValueError("truncated sparksketch bloom blob")
+                            found.setdefault((t, idx), []).append((sid, n, b, off))
+                            off += m // 8
+            except struct.error as e:
+                raise ValueError("truncated sparksketch bloom blob") from e
+            if off != len(data):
+                raise ValueError(f"{len(data) - off} trailing bytes after a sparksketch bloom blob")
+        if head is None:
+            raise ValueError("no sparksketch bloom blob to decode")
+        tiers, n_shards, m0, threshold, strict = head
+        st = cls(tiers, n_shards, m0, threshold, rehash0, strict=strict)
+        views = [memoryview(b) for b in blobs]
+        for (t, idx), placed in sorted(found.items()):
+            w = (m0 << idx) // 64
+            sids, ns, srcs, offs = zip(*placed)
+            held, first = np.unique(sids, return_index=True)
+            tb = st.tables[t][idx] = _Table(np.full(n_shards, -1, dtype=np.int64),
+                                           np.zeros(n_shards, dtype=np.int64),
+                                           np.empty((held.size, w), dtype=np.uint64))
+            tb.row[held] = np.arange(held.size)
+            np.add.at(tb.n, np.array(sids), np.array(ns, dtype=np.int64))
+            raw, nb = memoryview(tb.words).cast("B"), 8 * w
+            rows, copy = tb.row[list(sids)].tolist(), set(first.tolist())
+            for i, (r, src, off) in enumerate(zip(rows, srcs, offs)):
+                if i in copy:
+                    raw[r * nb:(r + 1) * nb] = views[src][off:off + nb]
+                else:
+                    tb.words[r] |= np.frombuffer(blobs[src], dtype=np.uint64, count=w, offset=off)
         return st
 
     # ---------------- merge (associative + commutative) ----------------
 
     def merge(self, other: "BloomFilterState") -> "BloomFilterState":
         """OR-merge ``other`` into self in place and return self, like every
-        other sketch's ``merge``.  O(|other|), so a linear fold over P
-        partials costs O(total size).  The donor is never aliased: adopted
-        shards and levels are copied, so a later merge cannot OR into it.
-        A geometry mismatch raises ``ValueError``; a filter-level mismatch
-        is caught before anything changes, a level-level one (possible only
-        for hand-built states, as decoded levels are validated) may leave
-        self partly merged."""
+        other sketch's ``merge``: per tier and level index, rows are added
+        for the shards self lacks, then one vectorised OR covers every
+        shard, and the key counts add.  O(|other|); the donor is copied,
+        never aliased.  A geometry mismatch raises ``ValueError`` before
+        anything changes."""
         if (self.tiers, self.n_shards, self.m0, self.threshold, self.strict) != (
             other.tiers, other.n_shards, other.m0, other.threshold, other.strict
         ):
             raise ValueError("cannot merge filters with different geometry")
-        self._layout = self._index = None  # shards and levels may be added below
-        for sid, cascade in other.shards.items():
-            mine = self.shards.get(sid)
-            if mine is None:
-                self.shards[sid] = [[lv.copy() for lv in t] for t in cascade]
-                continue
-            for t in range(self.tiers):
-                levels = {lv.idx: lv for lv in mine[t]}
-                for lv in cascade[t]:
-                    tgt = levels.get(lv.idx)
-                    if tgt is None:
-                        mine[t].append(lv.copy())
-                    elif (tgt.m, tgt.k) != (lv.m, lv.k):
-                        raise ValueError(f"shard {sid} tier {t} level {lv.idx}: "
-                                         "cannot merge levels with different geometry")
-                    else:
-                        tgt.bits |= lv.bits
-                        tgt.n += lv.n
-                mine[t].sort(key=lambda l: l.idx)
+        for t, tier in enumerate(other.tables):
+            for idx, src in sorted(tier.items()):
+                sids = np.flatnonzero(src.row >= 0)
+                tb = self._grow(t, idx, sids)
+                tb.words[tb.row[sids]] |= src.words[src.row[sids]]
+                tb.n += src.n
         return self
 
     # ---------------- queries ----------------
@@ -324,66 +425,20 @@ class BloomFilterState:
         h1, h2 = self._base_hashes(key)
         return bool(self.contains_hashes(h1, h2)[0])
 
-    # the probe index (see _probe_index).  _layout is (words, placements):
-    # one uint64 buffer that every level's bits view, and (tier, level idx,
-    # shard, word offset) of each level in it; _index is built from it on
-    # the first probe.  Anything that adds shards or levels drops both.
-    _layout = None
-    _index = None
-
-    def _pack(self) -> tuple[np.ndarray, list[tuple[int, int, int, int]]]:
-        """Copy every level's bits into one words buffer and rebind each
-        ``Level.bits`` to its view of it, so in-place writes to a level stay
-        visible to the probe.  Levels whose (m, k) is not their index's
-        geometry raise ``ValueError``: the probe takes (m, k) from it."""
-        levels = [(t, sid, lv) for sid, cascade in self.shards.items()
-                  for t, tier in enumerate(cascade) for lv in tier]
-        words = np.empty(sum(lv.m // 64 for _, _, lv in levels), dtype=np.uint64)
-        placed, off = [], 0
-        for t, sid, lv in levels:
-            if (lv.m, lv.k) != Level.geometry(lv.idx, self.m0, self.threshold):
-                raise ValueError(f"shard {sid} tier {t} level {lv.idx}: (m, k) is not its geometry")
-            n = lv.m // 64
-            words[off:off + n] = lv.bits
-            lv.bits = words[off:off + n]
-            placed.append((t, lv.idx, sid, off))
-            off += n
-        return words, placed
-
-    def _probe_index(self) -> tuple[np.ndarray, list[list[tuple[int, int, np.ndarray]]]]:
-        """(words, per tier [(m, k, offsets)] by level index): ``offsets`` is
-        an int64[n_shards] table of each shard-tier's word offset of that
-        level in ``words``, -1 where the shard-tier lacks the level."""
-        if self._index is None:
-            if self._layout is None:
-                self._layout = self._pack()
-            words, placed = self._layout
-            tables: list[dict[int, np.ndarray]] = [{} for _ in range(self.tiers)]
-            for t, idx, sid, off in placed:
-                offsets = tables[t].get(idx)
-                if offsets is None:
-                    offsets = tables[t][idx] = np.full(self.n_shards, -1, dtype=np.int64)
-                offsets[sid] = off
-            self._index = words, [
-                [(*Level.geometry(idx, self.m0, self.threshold), tables[t][idx])
-                 for idx in sorted(tables[t])]
-                for t in range(self.tiers)]
-        return self._index
-
     def _probe_tier(self, t: int, shard: np.ndarray, h1: np.ndarray, h2: np.ndarray,
                     active: np.ndarray) -> np.ndarray:
         """Membership of each ``active`` row in tier ``t`` of its ``shard``
-        (OR over the tier's levels); inactive rows come back False.  One
-        flat gather per level index present, never a loop over shards, so
-        the cost per key does not depend on the geometry."""
-        words, tiers = self._probe_index()
+        (OR over the tier's levels); inactive rows, and rows whose shard the
+        filter lacks, come back False.  One flat gather per level index,
+        never a loop over shards, so the cost per key does not depend on
+        the geometry."""
         ok = np.zeros(shard.shape[0], dtype=bool)
-        for m, k, offsets in tiers[t]:
-            base = offsets[shard]
-            rows = np.flatnonzero(active & ~ok & (base >= 0))
+        for _idx, m, k, tb in self._levels(t):
+            row = tb.row[shard]
+            rows = np.flatnonzero(active & ~ok & (row >= 0))
             if rows.size:
-                bit_base = base[rows].astype(np.uint64) << np.uint64(6)
-                ok[rows] = test_bits(words, km_indices(h1[rows], h2[rows], k, m)
+                bit_base = row[rows].astype(np.uint64) * np.uint64(m)
+                ok[rows] = test_bits(tb.words.reshape(-1), km_indices(h1[rows], h2[rows], k, m)
                                      + bit_base[:, None])
         return ok
 
@@ -391,7 +446,7 @@ class BloomFilterState:
         """Vectorized membership over the two shipped base hashes (int64);
         shard routing and per-tier KM pairs are derived exactly as in the
         build kernel.  Every geometry (uniform, mixed level depths, strict)
-        takes the same flat gather over the probe index: OR over a tier's
+        takes the same flat gather over the tables: OR over a tier's
         levels, AND over tiers.  Strict-parity filters AND over *both*
         shards of each tier (p1 and the reference's ``p2=(p1+mask/2)&mask``,
         filter.rs:120-137)."""
@@ -416,27 +471,31 @@ class BloomFilterState:
     @property
     def key_count(self) -> int:
         inserts_per_key = max(self.tiers, 1) * (2 if self.strict else 1)
-        return sum(lv.n for c in self.shards.values() for t in c for lv in t) // inserts_per_key
+        inserts = sum(int(tb.n.sum()) for tier in self.tables for tb in tier.values())
+        return inserts // inserts_per_key
 
     @property
     def bit_size(self) -> int:
-        return sum(lv.m for c in self.shards.values() for t in c for lv in t)
+        return sum(m * int((tb.row >= 0).sum())
+                   for t in range(self.tiers) for _idx, m, _k, tb in self._levels(t))
 
     def fpr_bound(self) -> float:
         """Upper bound on FPR for a probe: worst shard's product over tiers of
-        the union bound over levels of per-level fill FPR.  Strict mode
-        checks TWO shards per tier, so each tier's worst-shard term squares
-        (independent shards — the reference's 4-shard-check FPR shape)."""
+        the union bound over levels of per-level fill FPR, (1 - e^{-kn/m})^k.
+        Strict mode checks TWO shards per tier, so each tier's worst-shard
+        term squares (independent shards — the reference's 4-shard-check FPR
+        shape)."""
+        if not self._shard_ids().size:
+            return 0.0
         checks = 2 if self.strict else 1
-        worst_tier = [0.0] * self.tiers
-        for cascade in self.shards.values():
-            for t in range(self.tiers):
-                worst_tier[t] = max(worst_tier[t],
-                                    min(1.0, sum(lv.fill_fpr() for lv in cascade[t])))
         p = 1.0
         for t in range(self.tiers):
-            p *= worst_tier[t] ** checks
-        return p if self.shards else 0.0
+            fpr = np.zeros(self.n_shards)
+            for _idx, m, k, tb in self._levels(t):
+                held = tb.row >= 0
+                fpr[held] += (1.0 - np.exp(-k * tb.n[held] / m)) ** k
+            p *= min(1.0, float(fpr.max())) ** checks
+        return p
 
     def estimate_distinct(self) -> float:
         """Distinct-key estimate from the observed bit fill (Swamidass &
@@ -456,20 +515,23 @@ class BloomFilterState:
         (p1 and the antipodal p2, filter.rs:120-137), so the tier-0
         aggregate fill reflects 2n placements — divided back out below.
         """
-        est = 0.0
-        # sorted shard order: the float sum is then byte-identical between a
-        # direct build and any merge order of partials with the same bits
-        for sid in sorted(self.shards):
-            for lv in self.shards[sid][0]:
-                x = int(np.unpackbits(lv.bits.view(np.uint8)).sum())
-                if x == 0:
-                    continue
-                if x >= lv.m:
-                    # saturated: the formula diverges; report the estimate
-                    # at one unset bit (its maximum resolvable value)
-                    est += (lv.m / lv.k) * math.log(lv.m)
-                else:
-                    est += -(lv.m / lv.k) * math.log1p(-x / lv.m)
+        terms = []  # per level of tier 0: each shard's term
+        for _idx, m, k, tb in self._levels(0):
+            held = np.flatnonzero(tb.row >= 0)
+            bits = np.unpackbits(tb.words[tb.row[held]].view(np.uint8), axis=1)
+            x = bits.sum(axis=1, dtype=np.int64)
+            term = np.zeros(self.n_shards)
+            # saturated: the formula diverges; report the estimate at one
+            # unset bit (its maximum resolvable value)
+            term[held] = np.where(x >= m, (m / k) * math.log(m),
+                                  -(m / k) * np.log1p(-np.minimum(x, m - 1) / m))
+            terms.append(term)
+        if not terms:
+            return 0.0
+        # summed in (shard, level) order: the float sum is then identical
+        # between a direct build and any merge order of partials with the
+        # same bits
+        est = float(np.add.accumulate(np.stack(terms, axis=1).ravel())[-1])
         return est / 2.0 if self.strict else est
 
     def configured_fpr_bound(self) -> float:
@@ -477,7 +539,8 @@ class BloomFilterState:
         (levels)·0.6185^threshold per checked shard; tiers (and, in strict
         mode, the second shard per tier) multiply (filter.rs:373-383
         semantics; see SURVEY.md §1.3)."""
-        max_levels = max((len(t) for c in self.shards.values() for t in c), default=1)
+        max_levels = max((int(sum(tb.row >= 0 for tb in tier.values()).max())
+                          for tier in self.tables if tier), default=1)
         per_tier = min(1.0, max_levels * (0.6185 ** self.threshold))
         checks = 2 if self.strict else 1
         return per_tier ** (self.tiers * checks)
@@ -486,12 +549,11 @@ class BloomFilterState:
         """(shard, tier, level) whose merged key count exceeds capacity —
         signals a compaction (re-aggregation of the source table) is advised."""
         out = []
-        for sid, cascade in self.shards.items():
-            for t, levels in enumerate(cascade):
-                for lv in levels:
-                    if lv.n > lv.capacity(self.threshold):
-                        out.append((sid, t, lv.idx))
-        return out
+        for t in range(self.tiers):
+            for idx, m, _k, tb in self._levels(t):
+                over = (tb.row >= 0) & (tb.n > expected_n(m, self.threshold))
+                out += [(sid, t, idx) for sid in np.flatnonzero(over).tolist()]
+        return sorted(out)
 
 
 # ====================================================================
@@ -522,7 +584,7 @@ def resolve_m0(cfg: BloomConfig, n_shards: int, expected_keys: int | None) -> in
     return max(cfg.m0, _next_pow2(int(per_shard * cfg.threshold)))
 
 
-def hash_probe_cols(col: str | Column, tiers: int = 0, n_shards: int = 0) -> list[Column]:
+def hash_probe_cols(col: str | Column) -> list[Column]:
     """The two JVM-side base-hash columns (16 B/row) — everything else
     (shard id, per-tier KM hash pairs) is derived in the numpy kernels via
     splitmix64, halving the shuffle + Arrow transfer vs shipping per-tier
@@ -588,65 +650,23 @@ def _insert_ranked(rank: np.ndarray, first: int, m0: int, threshold: float, reha
                 set_bits(words, bit if base is None else bit + base[s:s + _SCATTER_ROWS, None])
 
 
-def _insert_arrivals(levels: list[Level], h1: np.ndarray, h2: np.ndarray, m0: int,
-                     threshold: float, rehash: bool, cap_div: int = 1) -> None:
-    """Insert (h1_t, h2_t) rows into one tier's cascade in arrival order:
-    ranks continue from the active level's fill, and levels open as ranks
-    reach them (:class:`GroupBloom`; the distributed build sorts first)."""
+def _insert_arrivals(st: BloomFilterState, sid: int, t: int, h1: np.ndarray, h2: np.ndarray,
+                     cap_div: int = 1) -> None:
+    """Insert (h1_t, h2_t) rows into tier ``t`` of shard ``sid`` in arrival
+    order: ranks continue from the active level's fill, and levels open as
+    ranks reach them (:class:`GroupBloom`; the distributed build sorts
+    first).  A new shard gets level 0 in every tier first."""
+    one = np.array([sid])
+    st._open(one)
+    first = max(idx for idx, tb in st.tables[t].items() if tb.row[sid] >= 0)
+
     def target(_t, idx, rows):
-        if levels[-1].idx < idx:
-            levels.append(Level.fresh(idx, m0, threshold))
-        levels[-1].n += rows.size
-        return levels[-1].bits, None
+        tb = st._grow(t, idx, one)
+        tb.n[sid] += rows.size
+        return tb.words[tb.row[sid]], None
 
-    first, fill = levels[-1].idx, levels[-1].n
-    _insert_ranked(fill + np.arange(h1.size), first, m0, threshold, rehash, cap_div,
-                   [(0, h1, h2)], target)
-
-
-class _TaskLevels:
-    """A build task's shard-tier levels, laid out for a flat scatter: per
-    (tier, level index) one words buffer with a row per shard that reached
-    the level, so one ``set_bits`` covers every shard of a batch.  Buffers
-    grow by doubling, so a task holds only its own shards' levels."""
-
-    def __init__(self, tiers: int, n_shards: int, m0: int, threshold: float):
-        self.tiers, self.n_shards, self.m0, self.threshold = tiers, n_shards, m0, threshold
-        self.at: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}  # row, keys per shard
-        self.words: dict[tuple[int, int], np.ndarray] = {}  # uint64[rows, m // 64]
-
-    def rows(self, t: int, idx: int, shard: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(flat words of tier ``t``'s level ``idx``, bit offset of each
-        ``shard``'s row in it), adding rows for shards new to the level."""
-        m = self.m0 << idx
-        if (t, idx) not in self.at:
-            self.at[t, idx] = (np.full(self.n_shards, -1, dtype=np.int64),
-                               np.zeros(self.n_shards, dtype=np.int64))
-            self.words[t, idx] = np.zeros((16, m // 64), dtype=np.uint64)
-        row, n = self.at[t, idx]
-        new = np.unique(shard[row[shard] < 0])
-        if new.size:
-            used, words = int(row.max()) + 1, self.words[t, idx]
-            if used + new.size > len(words):
-                self.words[t, idx] = np.zeros((2 * (used + new.size), m // 64), dtype=np.uint64)
-                self.words[t, idx][:used] = words[:used]
-            row[new] = np.arange(used, used + new.size)
-        n += np.bincount(shard, minlength=self.n_shards)
-        return self.words[t, idx].reshape(-1), row[shard].astype(np.uint64) * np.uint64(m)
-
-    def state(self, cfg: BloomConfig) -> BloomFilterState:
-        """The task's filter: every shard it saw, with level 0 in every tier."""
-        st = BloomFilterState(self.tiers, self.n_shards, self.m0, self.threshold, cfg.rehash,
-                              strict=cfg.strict_parity)
-        for (t, idx), (row, n) in sorted(self.at.items()):
-            m, k = Level.geometry(idx, self.m0, self.threshold)
-            for sid in np.flatnonzero(row >= 0).tolist():
-                cascade = st.shards.setdefault(sid, [[] for _ in range(self.tiers)])
-                cascade[t].append(Level(idx, m, k, int(n[sid]), self.words[t, idx][row[sid]]))
-        for levels in (lv for cascade in st.shards.values() for lv in cascade):
-            if not levels:  # strict: no key of this shard routed to this tier
-                levels.append(Level.fresh(0, self.m0, self.threshold))
-        return st
+    _insert_ranked(int(st.tables[t][first].n[sid]) + np.arange(h1.size), first, st.m0,
+                   st.threshold, st.rehash, cap_div, [(t, h1, h2)], target)
 
 
 def _column(batch: pa.RecordBatch, name: str) -> np.ndarray:
@@ -656,14 +676,15 @@ def _column(batch: pa.RecordBatch, name: str) -> np.ndarray:
 def _shard_batches(st: BloomFilterState):
     """A task's shards as single-shard blobs, in one Arrow batch unless the
     blobs pass ``_BATCH_BYTES`` (a binary column holds < 2 GiB)."""
+    header, entries = st._header(1), list(st._entries())
+    keys = sum(tb.n for tb in st.tables[0].values())  # the rows column: tier-0 keys
     sids, rows, blobs, size = [], [], [], 0
-    for i, sid in enumerate(sorted(st.shards)):
+    for i, (sid, entry) in enumerate(entries):
         sids.append(sid)
-        rows.append(sum(lv.n for lv in st.shards[sid][0]))
-        blobs.append(BloomFilterState(st.tiers, st.n_shards, st.m0, st.threshold, st.rehash,
-                                      {sid: st.shards[sid]}, strict=st.strict).to_bytes())
+        rows.append(int(keys[sid]))
+        blobs.append(b"".join([header, *entry]))
         size += len(blobs[-1])
-        if i == len(st.shards) - 1 or size >= _BATCH_BYTES:
+        if i == len(entries) - 1 or size >= _BATCH_BYTES:
             yield pa.RecordBatch.from_pydict({"shard": pa.array(sids, pa.int32()),
                                               "rows": pa.array(rows, pa.int64()),
                                               "state": pa.array(blobs, pa.binary())})
@@ -680,8 +701,8 @@ def _write_checkpoint(checkpoint_dir: str, pid: int, st: BloomFilterState, nrows
     length, digest).  The old meta goes first: a task that dies in between
     leaves a blob no meta vouches for, which a resume rebuilds."""
     blob = st.to_bytes()
-    meta = {"pid": pid, "rows": nrows, "fingerprint": fingerprint, "shards": sorted(st.shards),
-            "bytes": len(blob), "blake2b": _digest(blob)}
+    meta = {"pid": pid, "rows": nrows, "fingerprint": fingerprint,
+            "shards": st._shard_ids().tolist(), "bytes": len(blob), "blake2b": _digest(blob)}
     os.makedirs(checkpoint_dir, exist_ok=True)
     part = os.path.join(checkpoint_dir, f"part-{pid:05d}")
     if os.path.exists(part + ".meta.json"):
@@ -717,7 +738,7 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
                 yield from _shard_batches(BloomFilterState.from_bytes(f.read()))
             return
 
-        levels = _TaskLevels(tiers, n_shards, m0, cfg.threshold)
+        st = BloomFilterState(tiers, n_shards, m0, cfg.threshold, cfg.rehash, strict=strict)
         count = np.zeros(n_shards * (tiers if strict else 1), dtype=np.int64)  # keys per group
         last, nrows = None, 0
         for batch in batches:
@@ -747,9 +768,8 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
             for sel, ts in parts:
                 _insert_ranked(rank[sel], 0, m0, cfg.threshold, cfg.rehash, 1,
                                [(t, *tier_hashes(h1[sel], h2[sel], t)) for t in ts],
-                               lambda t, idx, r, s=shard[sel]: levels.rows(t, idx, s[r]))
-
-        st = levels.state(cfg)
+                               lambda t, idx, r, s=shard[sel]: st._place(t, idx, s[r]))
+        st._open(st._shard_ids())  # strict: a shard may get no key of some tier
         if checkpoint_dir:
             _write_checkpoint(checkpoint_dir, pid, st, nrows, fingerprint)
         yield from _shard_batches(st)
@@ -812,8 +832,9 @@ def build_bloom_states(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig()
     never the text) → Sort within partitions by (shard, h1, h2), strict by
     (shard, tier, h1, h2) (Spark's external sort: it spills) → MapInArrow
     (:func:`_build_partition_fn`).  Each shard is built by one task, which
-    holds its shards' levels (filter_size / partitions) plus one Arrow
-    batch.  Row order, input partitioning and duplicate keys change no byte
+    holds its shards' level tables (about filter_size / partitions; a
+    table grows by doubling, so up to twice that) plus one Arrow batch.
+    Row order, input partitioning and duplicate keys change no byte
     of the filter, and ``key_count`` counts distinct keys.
 
     Checkpointing (``checkpoint_dir``) assumes ONE filesystem visible to the
@@ -843,7 +864,7 @@ def build_bloom_states(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig()
         # The reference *documents* a 1 MB key cap but never enforces it
         # (README.md:14-15 vs filter.rs:509-510); we make the contract real.
         keyed = keyed.filter(F.octet_length("_skkey") <= cfg.max_key_bytes)
-    hashed = keyed.select(*hash_probe_cols("_skkey", cfg.tiers, n_shards))
+    hashed = keyed.select(*hash_probe_cols("_skkey"))
     if cfg.strict_parity:
         # reference parity (filter.rs:120-137): tier t routes by base hash t;
         # each key inserts into p1 and p2 = (p1 + mask/2) & mask.  Explode to
@@ -879,28 +900,27 @@ def build_bloom(df: DataFrame, col: str, cfg: BloomConfig = BloomConfig(),
                 merge: str = "auto") -> BloomFilterState:
     """Build and OR-merge into a single driver-side filter.
 
-    The per-shard blobs are collected once (one Spark job) and folded
-    linearly on the driver, each parsed once and merged in place, so the
+    The per-shard blobs are collected once (one Spark job) and decoded into
+    one filter by one :meth:`~BloomFilterState.from_blobs` pass, so the
     fold costs O(filter size) at any shard count.  Each shard comes from
-    one task, so the fold adopts shards and ORs no bits.  ``merge`` accepts
-    ``"auto"`` and ``"driver"``,
-    which both mean this fold; any other value raises ``ValueError``.  For
-    a filter too big for driver memory, never collect it: use
-    :func:`build_bloom_states` + :func:`membership_join`."""
+    one task, so the fold ORs no bits.  ``merge`` accepts ``"auto"`` and
+    ``"driver"``, which both mean this fold; any other value raises
+    ``ValueError``.  For a filter too big for driver memory, never collect
+    it: use :func:`build_bloom_states` + :func:`membership_join`."""
     if merge not in ("auto", "driver"):
         raise ValueError(f"merge={merge!r}: build_bloom has one merge, the driver fold "
                          "('auto' or 'driver')")
     states, info = build_bloom_states(df, col, cfg, n_shards, partitions, expected_keys,
                                       checkpoint_dir, input_id, enforce_key_limit)
-    acc = BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
-    for row in states.select("state").collect():
-        acc.merge(BloomFilterState.from_bytes(row[0]))
-    return acc
+    blobs = [row[0] for row in states.select("state").collect()]
+    if not blobs:
+        return BloomFilterState.empty(cfg, info["n_shards"], info["m0"])
+    return BloomFilterState.from_blobs(blobs)
 
 
 def merge_blobs(a: bytes, b: bytes) -> bytes:
-    """Parse both blobs, :meth:`~BloomFilterState.merge`, serialise."""
-    return BloomFilterState.from_bytes(a).merge(BloomFilterState.from_bytes(b)).to_bytes()
+    """Fold both blobs (:meth:`~BloomFilterState.from_blobs`), serialise."""
+    return BloomFilterState.from_blobs([a, b]).to_bytes()
 
 
 # ====================================================================
@@ -928,38 +948,46 @@ def with_membership(df: DataFrame, col: str, state: BloomFilterState,
     positives ≤ the configured bound.
 
     Cost model: the first probe batch in each Python worker fetches the
-    broadcast blob and decodes it straight into the probe index, one words
-    buffer holding every level (the fetch dominates — measured ~60 s total
-    for 128 MiB × 32 local workers, then cached in the single worker slot).
-    Every batch is then one flat gather per tier and level index, at the
-    same cost per key for uniform, mixed-depth and strict filters.  For
-    filters beyond ~100 MiB probed once, or too big for worker memory,
-    prefer :func:`membership_join`, which never replicates the filter."""
+    broadcast blob and decodes it into the filter's tables, one copy of the
+    bits (the fetch dominates — measured ~60 s total for 128 MiB × 32 local
+    workers, then cached in the single worker slot).  Every batch is then
+    one flat gather per tier and level index, at the same cost per key for
+    uniform, mixed-depth and strict filters.  For filters beyond ~100 MiB
+    probed once, or too big for worker memory, prefer
+    :func:`membership_join`, which never replicates the filter."""
     hcols = hash_probe_cols(F.col(col).cast("string"))
     return df.withColumn(out, _membership_probe_udf(df.sparkSession, state)(*hcols))
 
 
-def broadcast_probe_udf(spark, blob: bytes, deserialize):
-    """Generic broadcast-probe pandas UDF over two base-hash columns: ship
-    ``blob`` once, deserialize once per Python worker (single-slot cache
-    keyed by a driver-side sequence — Broadcast has no ``.id`` in PySpark
-    4), then call ``.contains_hashes(h1_i64, h2_i64)`` per batch.  Shared
-    by the Bloom and counting-Bloom probes so cache/null-handling fixes
-    land in one place."""
-    bc = spark.sparkContext.broadcast(blob)
+def _broadcast_cached(spark, value, deserialize):
+    """Ship ``value`` once and return ``load()``, which gives
+    ``deserialize(value)`` on a worker, decoded once per cache slot (keyed
+    by a driver-side sequence — Broadcast has no ``.id`` in PySpark 4).
+    The one cache of every broadcast probe."""
+    bc = spark.sparkContext.broadcast(value)
     _BC_SEQ[0] += 1
     bc_key = _BC_SEQ[0]
 
+    def load():
+        if _BC_CACHE[0] != bc_key:
+            _BC_CACHE[:] = [bc_key, deserialize(bc.value)]
+        return _BC_CACHE[1]
+
+    return load
+
+
+def broadcast_probe_udf(spark, blob: bytes, deserialize):
+    """Generic broadcast-probe pandas UDF over two base-hash columns: ship
+    ``blob`` once, deserialize it through the worker cache
+    (:func:`_broadcast_cached`), then call ``.contains_hashes(h1_i64,
+    h2_i64)`` per batch.  Shared by the Bloom and counting-Bloom probes so
+    cache/null-handling fixes land in one place."""
+    load = _broadcast_cached(spark, blob, deserialize)
+
     @F.pandas_udf("boolean")
     def probe(ha, hb):
-        if _BC_CACHE[0] == bc_key:
-            cached = _BC_CACHE[1]
-        else:
-            cached = deserialize(bc.value)
-            _BC_CACHE[0] = bc_key
-            _BC_CACHE[1] = cached
         import pandas as pd
-        return pd.Series(cached.contains_hashes(
+        return pd.Series(load().contains_hashes(
             ha.to_numpy(dtype=np.int64, na_value=0),
             hb.to_numpy(dtype=np.int64, na_value=0)))
 
@@ -979,6 +1007,12 @@ def _decode_state(blob: bytes) -> BloomFilterState:
     whereas a bound classmethod goes by value, with every module global its
     code reads (one unpicklable global would break every broadcast probe)."""
     return BloomFilterState.from_bytes(blob)
+
+
+def _decode_group_states(blobs: dict) -> dict:
+    """{group: blob} → {group: state}: the group probe's decoder (module
+    level for the same reason as :func:`_decode_state`)."""
+    return {grp: BloomFilterState.from_bytes(b) for grp, b in blobs.items()}
 
 
 def with_group_membership(df: DataFrame, group_col: str, col: str, states,
@@ -1013,19 +1047,12 @@ def with_group_membership(df: DataFrame, group_col: str, col: str, states,
                 f"got {len(states)} groups > max_groups={max_groups} - use "
                 f"membership_join for group cardinalities this large")
         blobs = {g: bytes(b) for g, b in states.items()}
-    bc = spark.sparkContext.broadcast(blobs)
-    _BC_SEQ[0] += 1
-    bc_key = _BC_SEQ[0]
+    load = _broadcast_cached(spark, blobs, _decode_group_states)
 
     @F.pandas_udf("boolean")
     def probe(g, ha, hb):
         import pandas as pd
-        if _BC_CACHE[0] == bc_key:
-            cached = _BC_CACHE[1]
-        else:
-            cached = {grp: BloomFilterState.from_bytes(b) for grp, b in bc.value.items()}
-            _BC_CACHE[0] = bc_key
-            _BC_CACHE[1] = cached
+        cached = load()
         ga = g.to_numpy(dtype=object, na_value=None)
         h1 = ha.to_numpy(dtype=np.int64, na_value=0)
         h2 = hb.to_numpy(dtype=np.int64, na_value=0)
@@ -1056,10 +1083,11 @@ def membership_join(probes: DataFrame, col: str, states: DataFrame,
     ``states`` is the output of :func:`build_bloom_states` (or the same
     re-read from parquet).  Probes gain shard + hash columns (JVM), then an
     equi-join on shard id co-locates each probe with exactly the shard blobs
-    it needs; a grouped Arrow kernel tests membership. Shuffle cost: probes
-    ~40 B/row + the shard states once.  Same oversize-key caveat as
-    :func:`with_membership`: zero FN holds among keys within the build's
-    ``max_key_bytes`` guard."""
+    it needs; an Arrow kernel decodes each batch's distinct shard blobs into
+    one filter (:meth:`~BloomFilterState.from_blobs`) and probes the whole
+    batch in one call.  Shuffle cost: probes ~40 B/row + the shard states
+    once.  Same oversize-key caveat as :func:`with_membership`: zero FN
+    holds among keys within the build's ``max_key_bytes`` guard."""
     if tiers is None or n_shards is None or strict is None:
         # geometry unknown → read one blob header; pass all THREE of
         # (tiers, n_shards, strict) to skip this extra evaluation of the
@@ -1093,25 +1121,9 @@ def membership_join(probes: DataFrame, col: str, states: DataFrame,
 
     def check(batches):
         for batch in batches:
-            n = batch.num_rows
-            result = np.zeros(n, dtype=bool)
-            blobs = batch.column("state")
-            shard_col = batch.column(_ROUTE).to_numpy(zero_copy_only=False).astype(np.int64)
-            # group rows by shard (same shard → same blob)
-            valid = pa.compute.is_valid(blobs).to_numpy(zero_copy_only=False)
-            if valid.any():
-                order = np.argsort(shard_col, kind="stable")
-                s_sorted = shard_col[order]
-                starts = np.concatenate(([0], np.flatnonzero(np.diff(s_sorted)) + 1, [n]))
-                h1_all = batch.column("_skh_a").to_numpy(zero_copy_only=False).astype(np.int64)
-                h2_all = batch.column("_skh_b").to_numpy(zero_copy_only=False).astype(np.int64)
-                for si in range(len(starts) - 1):
-                    rows = order[starts[si] : starts[si + 1]]
-                    i0 = int(rows[0])
-                    if not blobs[i0].is_valid:
-                        continue
-                    st = BloomFilterState.from_bytes(blobs[i0].as_py())
-                    result[rows] = st.contains_hashes(h1_all[rows], h2_all[rows])
+            st = _joined_state(batch)
+            result = (np.zeros(batch.num_rows, dtype=bool) if st is None else
+                      st.contains_hashes(_column(batch, "_skh_a"), _column(batch, "_skh_b")))
             passthrough = [batch.column(c) for c in probe_cols]
             yield pa.RecordBatch.from_arrays(
                 [*passthrough, pa.array(result, pa.bool_())],
@@ -1147,34 +1159,16 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
 
     def check(batches):
         for batch in batches:
-            n = batch.num_rows
-            result = np.zeros(n, dtype=bool)
-            blobs = batch.column("state")
-            shard_col = batch.column(_ROUTE).to_numpy(zero_copy_only=False).astype(np.int64)
-            tier_col = batch.column("_sktier").to_numpy(zero_copy_only=False).astype(np.int64)
-            h1_all = batch.column("_skh_a").to_numpy(zero_copy_only=False).astype(np.int64)
-            h2_all = batch.column("_skh_b").to_numpy(zero_copy_only=False).astype(np.int64)
-            # shard-major grouping: the blob parses ONCE per shard (both its
-            # tier groups reuse it), and only the group's own tier hashes
-            # are derived
-            key = shard_col * tiers + tier_col
-            order = np.argsort(key, kind="stable")
-            sorted_key = key[order]
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(sorted_key)) + 1, [n]))
-            st, st_shard = None, None
-            for si in range(len(starts) - 1):
-                rows = order[starts[si] : starts[si + 1]]
-                i0 = int(rows[0])
-                if not blobs[i0].is_valid:
-                    continue
-                sid = int(shard_col[i0])
-                if st_shard != sid:
-                    st = BloomFilterState.from_bytes(blobs[i0].as_py())
-                    st_shard = sid
-                t = int(tier_col[i0])
-                h1t, h2t = tier_hashes(h1_all[rows], h2_all[rows], t)
-                result[rows] = st._probe_tier(t, shard_col[rows], h1t, h2t,
-                                              np.ones(rows.size, dtype=bool))
+            result = np.zeros(batch.num_rows, dtype=bool)
+            st = _joined_state(batch)
+            if st is not None:
+                shard, tier = _column(batch, _ROUTE), _column(batch, "_sktier")
+                h1, h2 = _column(batch, "_skh_a"), _column(batch, "_skh_b")
+                for t in range(tiers):  # each row checks one (shard, tier)
+                    rows = np.flatnonzero(tier == t)
+                    th1, th2 = tier_hashes(h1[rows], h2[rows], t)
+                    result[rows] = st._probe_tier(t, shard[rows], th1, th2,
+                                                  np.ones(rows.size, dtype=bool))
             yield pa.RecordBatch.from_arrays(
                 [batch.column("_skh_a"), batch.column("_skh_b"),
                  pa.array(result, pa.bool_())],
@@ -1187,15 +1181,25 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
             .select(*probe_cols, F.coalesce(F.col(out), F.lit(False)).alias(out)))
 
 
+def _joined_state(batch: pa.RecordBatch) -> BloomFilterState | None:
+    """The filter of the distinct shard blobs in a batch of probe rows
+    joined to their shard states (all rows of a shard carry the same
+    blob), or None if no row found a state.  Rows whose shard it lacks
+    probe False."""
+    blobs = batch.column("state")
+    valid = np.flatnonzero(pa.compute.is_valid(blobs).to_numpy(zero_copy_only=False))
+    if not valid.size:
+        return None
+    _, first = np.unique(_column(batch, _ROUTE)[valid], return_index=True)
+    return BloomFilterState.from_blobs(blobs.take(valid[first]).to_pylist())
+
+
 def _merge_state_rows(pdf):
-    """One shard's state rows → one row: each blob parsed once, folded in
-    place, serialised once."""
+    """One shard's state rows → one row: the blobs folded by one
+    :meth:`~BloomFilterState.from_blobs`, serialised once."""
     import pandas as pd
-    acc = None
-    for b in pdf["state"]:
-        st = BloomFilterState.from_bytes(bytes(b))
-        acc = st if acc is None else acc.merge(st)
-    return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "state": [acc.to_bytes()]})
+    st = BloomFilterState.from_blobs(bytes(b) for b in pdf["state"])
+    return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "state": [st.to_bytes()]})
 
 
 # ====================================================================
@@ -1222,14 +1226,11 @@ class GroupBloom:
         m0 = m0 or self.cfg.m0
         self.cap_div = cap_div
         self.state = BloomFilterState(self.cfg.tiers, 1, m0, self.cfg.threshold, self.cfg.rehash)
-        self.state.shards[0] = [[Level.fresh(0, m0, self.cfg.threshold)]
-                                for _ in range(self.cfg.tiers)]
+        self.state._open(np.zeros(1, dtype=np.int64))
 
     def update_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        st = self.state
-        st._layout = st._index = None  # the insert may open levels
-        for t, (a, b) in enumerate(derive_tier_hashes(h1, h2, st.tiers)):
-            _insert_arrivals(st.shards[0][t], a, b, st.m0, st.threshold, st.rehash, self.cap_div)
+        for t, (a, b) in enumerate(derive_tier_hashes(h1, h2, self.state.tiers)):
+            _insert_arrivals(self.state, 0, t, a, b, self.cap_div)
 
     def merge(self, other: "GroupBloom") -> "GroupBloom":
         self.state.merge(other.state)

@@ -218,33 +218,3 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
-
-
-def jump_hash(keys: np.ndarray, buckets: int) -> np.ndarray:
-    """Vectorized Lamping–Veach jump consistent hash (2014, public paper) —
-    the reference's shard router (/root/reference/src/filter.rs:467-483).
-
-    Provided for parity and for *resizable* shard vectors (its minimal-
-    movement property: growing n buckets relocates only ~1/n of keys).  The
-    library's default router is ``pmod`` because the reference never resizes
-    a live shard vector (filter.rs:190) and pmod is a plain codegen'd JVM
-    expression; swap this in when building migratable filter families.
-
-    ``keys`` uint64[n]; returns int64 bucket ids in [0, buckets).
-    """
-    key = to_u64(keys).copy()
-    b = np.full(key.shape, -1, dtype=np.int64)
-    j = np.zeros(key.shape, dtype=np.int64)
-    active = np.ones(key.shape, dtype=bool)
-    # LCG step + float jump, exactly the reference's loop, applied lane-wise;
-    # all lanes finish within O(log buckets) iterations w.h.p.
-    while active.any():
-        b[active] = j[active]
-        key[active] = key[active] * np.uint64(2862933555777941757) + np.uint64(1)
-        shifted = ((key[active] >> np.uint64(33)) + np.uint64(1)).astype(np.float64)
-        j_new = ((b[active] + 1).astype(np.float64) * (float(1 << 31) / shifted)).astype(np.int64)
-        j[active] = j_new
-        still = np.zeros(key.shape, dtype=bool)
-        still[active] = j_new < buckets
-        active = still
-    return b

@@ -406,10 +406,10 @@ def test_sync_port_200k(spark):
 
 def _oracle_contains(state, h1, h2):
     """Scalar reference probe, one key at a time and independent of the
-    probe index: per tier, OR over that tier's levels of ``check_bits`` on
-    the level's own bits; AND over tiers, and in strict mode over both
-    shards of each tier."""
-    n = state.n_shards
+    tables' flat gather: per tier, OR over that tier's levels (the
+    ``shards`` view) of ``check_bits`` on the level's own bits; AND over
+    tiers, and in strict mode over both shards of each tier."""
+    n, shards = state.n_shards, state.shards
     out = np.zeros(len(h1), dtype=bool)
     for i in range(len(h1)):
         a, b = h1[i:i + 1], h2[i:i + 1]
@@ -418,7 +418,7 @@ def _oracle_contains(state, h1, h2):
         for t, (th1, th2) in enumerate(derive_tier_hashes(a, b, state.tiers)):
             sids = [routes[t], (routes[t] + (n - 1) // 2) % n] if state.strict else [routes[0]]
             for sid in sids:
-                levels = state.shards[sid][t] if sid in state.shards else []
+                levels = shards[sid][t] if sid in shards else []
                 member &= any(check_bits(lv.bits, km_indices(th1, th2, lv.k, lv.m))[0]
                               for lv in levels)
         out[i] = member
@@ -485,16 +485,15 @@ def test_flat_probe_equals_scalar_oracle(spark, strict_default_geometry):
     _assert_probe_matches_oracle(strict, rng.sample(keys, 4000), absent)
 
     # levels {0, 2} in every shard-tier: half the keys in each
-    gapped = BloomFilterState(cfg.tiers, 4, 64, cfg.threshold, cfg.rehash)
-    for sid in range(4):
-        gapped.shards[sid] = [[Level.fresh(0, 64, cfg.threshold), Level.fresh(2, 64, cfg.threshold)]
-                              for _ in range(cfg.tiers)]
+    levels = {sid: [[Level.fresh(0, 64, cfg.threshold), Level.fresh(2, 64, cfg.threshold)]
+                    for _ in range(cfg.tiers)] for sid in range(4)}
     inserted = [f"gap-{k}" for k in range(200)]
     h1, h2 = _key_hashes(inserted)
     for t, (th1, th2) in enumerate(derive_tier_hashes(h1, h2, cfg.tiers)):
         for i, sid in enumerate(derive_shard(h1, 4)):
-            lv = gapped.shards[int(sid)][t][i % 2]
+            lv = levels[int(sid)][t][i % 2]
             set_bits(lv.bits, km_indices(th1[i:i + 1], th2[i:i + 1], lv.k, lv.m))
+    gapped = BloomFilterState(cfg.tiers, 4, 64, cfg.threshold, cfg.rehash, levels)
     _assert_probe_matches_oracle(gapped, inserted, absent)
 
     empty = BloomFilterState.empty(cfg, 16)
@@ -531,10 +530,8 @@ def _partial(n_keys: int, n_shards: int, strict: bool, seed: int):
                    else [routes[0]])
         for sids in targets:
             for sid in np.unique(sids):
-                cascade = state.shards.setdefault(
-                    int(sid), [[Level.fresh(0, 64, cfg.threshold)] for _ in range(cfg.tiers)])
                 rows = sids == sid
-                _insert_arrivals(cascade[t], th1[rows], th2[rows], 64, cfg.threshold, cfg.rehash)
+                _insert_arrivals(state, int(sid), t, th1[rows], th2[rows])
     return state, h1, h2
 
 

@@ -68,3 +68,25 @@ def test_gate_removes_only_dead_pid_dirs(tmp_path):
         (tmp_path / name / "part").mkdir(parents=True)
     _remove_dead_pid_dirs(str(tmp_path), "gate_")
     assert sorted(p.name for p in tmp_path.iterdir()) == sorted(set(names) - {f"gate_{dead}"})
+
+
+def test_compaction_gate_keeps_only_live_pid_dirs(spark, tmp_path, monkeypatch):
+    """The compaction gate query sinks under the temp dir, and a later call
+    removes the sinks of exited processes: only live-pid dirs stay."""
+    import subprocess
+    import sys
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _SFS[0]
+    prefix = f"sparksketch_gate_compact_{os.path.basename(sf.rstrip('/'))}_"
+    live = f"{prefix}{os.getpid()}"
+    n_rows = entry._compact_roundtrip_docs(spark, sf).count()
+    assert n_rows > 0 and sorted(p.name for p in tmp_path.iterdir()) == [live]
+    done = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    (tmp_path / f"{prefix}{int(done.stdout)}" / "part").mkdir(parents=True)
+    assert entry._compact_roundtrip_docs(spark, sf).count() == n_rows
+    assert sorted(p.name for p in tmp_path.iterdir()) == [live]

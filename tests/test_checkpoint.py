@@ -137,8 +137,8 @@ def test_completed_partitions_skips_malformed_metas(tmp_path):
     digest and this build's geometry; anything else is skipped, never
     raised."""
     chk, cfg = str(tmp_path), BloomConfig()
-    st = BloomFilterState.empty(cfg, 8)
-    st.shards[3] = [[Level.fresh(0, cfg.m0, cfg.threshold)] for _ in range(cfg.tiers)]
+    st = BloomFilterState(cfg.tiers, 8, cfg.m0, cfg.threshold, cfg.rehash,
+                          {3: [[Level.fresh(0, cfg.m0, cfg.threshold)] for _ in range(cfg.tiers)]})
     _write_checkpoint(chk, 0, st, 1, "fp")
     assert completed_partitions(chk, "fp", cfg, 8, cfg.m0) == {0}
     assert completed_partitions(chk, "fp", cfg, 16, cfg.m0) == frozenset()

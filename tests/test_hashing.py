@@ -65,29 +65,3 @@ def test_km_indices_and_bits_roundtrip():
     p1 = rng.integers(0, 2**63, 500).astype(np.uint64)
     p2 = rng.integers(0, 2**63, 500).astype(np.uint64)
     assert check_bits(bits, km_indices(p1, p2, k, m)).mean() < 0.05
-
-
-def test_jump_hash_reference_parity():
-    """Vectorized Lamping–Veach jump hash vs a direct scalar port of the
-    published algorithm (the reference's router, filter.rs:467-483), plus
-    its defining minimal-movement property."""
-    import numpy as np
-    from sparksketch.hashing import jump_hash
-
-    def jump_scalar(key, buckets):
-        b, j = -1, 0
-        key &= (1 << 64) - 1
-        while j < buckets:
-            b = j
-            key = (key * 2862933555777941757 + 1) & ((1 << 64) - 1)
-            j = int(float(b + 1) * (float(1 << 31) / float((key >> 33) + 1)))
-        return b
-
-    rng = np.random.default_rng(1)
-    keys = rng.integers(0, 2**64, 2000, dtype=np.uint64)
-    v = jump_hash(keys, 64)
-    assert (v == np.array([jump_scalar(int(k), 64) for k in keys])).all()
-    assert v.min() >= 0 and v.max() < 64
-    # minimal movement: growing 64 → 65 buckets relocates ≈ 1/65 of keys
-    moved = (v != jump_hash(keys, 65)).mean()
-    assert moved < 3 / 65
