@@ -710,9 +710,9 @@ def _ivfpq_knn_join_emb(spark: SparkSession, sf: str) -> DataFrame:
     #   recall_ok — two-stage top-5 (ADC shortlist + exact rerank,
     #     pq.ivfpq_knn_join_rerank) vs the exact-L2 top-5 (crossJoin
     #     ground truth, the certificate-only exception to the
-    #     no-crossJoin rule) overlaps >= 60 of 100 slots (bar set well
-    #     under the measured 92-99 so host-to-host k-means jitter in the
-    #     coarse quantizer can't flip the certificate).  The shortlist
+    #     no-crossJoin rule) overlaps >= 75 of 100 slots (measured 92-99;
+    #     the bar leaves 17+ slots of room for host-to-host k-means jitter
+    #     in the coarse quantizer).  The shortlist
     #     scales with the corpus (n/32, floor 100) — a FIXED shortlist is
     #     a shrinking fraction as SF grows and the certificate would decay
     #     into noise (the round-5 data-driven-threshold lesson); k=64
@@ -754,7 +754,7 @@ def _ivfpq_knn_join_emb(spark: SparkSession, sf: str) -> DataFrame:
     overlap = sum(len(set(v) & true_by_q[q]) for q, v in by_q.items())
     return spark.createDataFrame(
         [Row(n_queries=len(by_q), n_pairs=len(got),
-             self_ok=bool(self_ok), recall_ok=bool(overlap >= 60))],
+             self_ok=bool(self_ok), recall_ok=bool(overlap >= 75))],
         "n_queries long, n_pairs long, self_ok boolean, recall_ok boolean")
 
 

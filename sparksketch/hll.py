@@ -1,9 +1,12 @@
 """HyperLogLog — dense registers, register-max merge, standard corrections.
 
 Mergeable distinct-count sketch in the library's partial/final pattern
-(SURVEY.md §2.2): one JVM ``xxhash64`` per row, numpy register updates per
-Arrow batch, element-wise-max merge.  Standard error 1.04/√m (Flajolet et
-al. 2007); small-range correction via linear counting.  p ∈ [4, 18].
+(SURVEY.md §2.2): one JVM ``xxhash64`` per row, element-wise-max merge.
+Distributed builds update the registers in the engine (:meth:`HLL.engine_cells`:
+register index and rho as Catalyst expressions, ``max`` per register as a
+native aggregate); ``update_hashes`` is the numpy form of the same update, for
+streaming folds and UDAFs.  Standard error 1.04/√m (Flajolet et al. 2007);
+small-range correction via linear counting.  p ∈ [4, 18].
 """
 
 from __future__ import annotations
@@ -12,7 +15,8 @@ import math
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from sparksketch import sketch as _sk
 
@@ -46,6 +50,21 @@ def _bit_length_u64(w: np.ndarray) -> np.ndarray:
     return bl
 
 
+def _bit_length_col(w: Column) -> Column:
+    """Exact bit_length of a non-negative long column.  ``floor(log2(double))
+    + 1`` can be off by one (``log2(2^50 - 1)`` rounds to 50.0), so unsigned
+    shifts check it and correct it in either direction."""
+    b = (F.floor(F.log2(w)) + 1).cast("int")
+
+    def shr(n: Column) -> Column:
+        return F.call_function("shiftrightunsigned", w, n)
+
+    return (F.when(w == 0, F.lit(0))
+            .when(shr(b) > 0, b + 1)
+            .when(shr(b - 1) == 0, b - 1)
+            .otherwise(b))
+
+
 class HLL:
     def __init__(self, p: int = 14):
         if not 4 <= p <= 18:
@@ -61,6 +80,23 @@ class HLL:
         w = h >> np.uint64(self.p)  # remaining 64-p bits
         rho = ((64 - self.p) - _bit_length_u64(w) + 1).astype(np.uint8)
         _seg_max(self.regs, idx, rho)
+
+    # ---- engine update (sketch.build_sketch / sketch_by_group) ----
+
+    engine_agg = staticmethod(F.max)
+
+    def engine_cells(self, h: Column) -> tuple[Column, Column]:
+        """:meth:`update_hashes` as Catalyst expressions over the signed
+        ``xxhash64`` column: (register index, rho) per row.  Only masks and
+        unsigned shifts, so nothing overflows under ANSI mode."""
+        w = F.shiftrightunsigned(h, self.p)
+        return (h.bitwiseAND(F.lit(self.m - 1).cast("long")),
+                F.lit(65 - self.p) - _bit_length_col(w))
+
+    def fill_cells(self, cells: np.ndarray, values: np.ndarray) -> "HLL":
+        """Set the registers from ``engine_agg``'s (index, max rho) rows."""
+        self.regs[cells] = values
+        return self
 
     # ---- merge / serde ----
 
@@ -105,7 +141,8 @@ class HLL:
 
 
 def hll_distinct(df: DataFrame, col: str, p: int = 14) -> float:
-    """Global approximate COUNT(DISTINCT col). Zero shuffles."""
+    """Global approximate COUNT(DISTINCT col).  Shuffles no raw rows: at
+    most m aggregated registers per scan partition."""
     sk = _sk.build_sketch(df, col, lambda pid: HLL(p), seeds=(HLL_SEED,))
     return sk.estimate()
 

@@ -1,24 +1,38 @@
 """The shared mergeable partial/final pattern for all sketches.
 
 Every sketch in the library (Bloom has its own sharded variant in bloom.py;
-HLL/CMS/t-digest/KLL use this module) follows the same distributed shape —
-the Spark-native reformulation of the reference's "insert into a shared
-mutable structure" model:
+HLL/CMS/t-digest/KLL/Theta/AMS use this module) follows the same distributed
+shape — the Spark-native reformulation of the reference's "insert into a
+shared mutable structure" model:
 
 1. **Project** — key/value extraction + JVM-side ``xxhash64`` hash columns
    (whole-stage codegen; the Python kernel never hashes).
-2. **Partial** — ``mapInArrow`` builds one sketch per *scan partition*
-   (map-side combine: NO shuffle of raw rows for global sketches — at 100 TB
-   this is the difference between shuffling nothing and shuffling everything).
-3. **Final** — ``treeReduce`` merges the per-partition byte blobs in log
-   depth, or, for per-group sketches, a ``groupBy(group)`` over the tiny
-   (groups × partitions) partial-state table — the shuffle moves sketch
-   blobs, not rows.
+2. **Partial** — a map-side combine, so a global sketch shuffles no raw rows
+   (at 100 TB this is the difference between shuffling nothing and
+   shuffling everything).  Two forms:
 
-A sketch class implements: ``update_hashes(*h: np.uint64[])`` or
+   - *engine* (HLL, CMS: classes with ``engine_cells``): Catalyst
+     expressions map each row to the sketch cell(s) it writes, and a native
+     ``groupBy(cell)`` aggregate (``max`` for HLL registers, ``count`` for
+     CMS counters) combines them map-side.  No Python runs per scan
+     partition.
+   - *kernel* (every other sketch): ``mapInArrow`` builds one sketch per
+     scan partition with the class's numpy update.
+3. **Final** — a global engine build pulls its ≤ m (or d·w) aggregated
+   cells with ``toArrow()`` and fills the sketch on the driver; a kernel
+   build collects the per-partition blobs and merges them on the driver
+   (``treeAggregate`` past 256 partitions).  Per-group sketches shuffle
+   only the (group × cell) aggregate or the (group × partition) blobs, then
+   build each group's state in one Arrow / pandas group function.
+
+A kernel sketch class implements: ``update_hashes(*h: np.uint64[])`` or
 ``update_values(v: np.float64[])``, ``merge(other) -> self``, ``to_bytes()``,
-classmethod ``from_bytes(data)``.  Merges must be associative + commutative
-(verified in tests by shuffling merge order).
+classmethod ``from_bytes(data)``.  An engine sketch class adds
+``engine_cells(*h: Column) -> (cell, value)`` (``cell`` may be a generator
+such as ``explode``), ``engine_agg`` (the aggregate over ``value``) and
+``fill_cells(cells, values) -> self``; its states are byte-identical to the
+kernel's.  Merges must be associative + commutative (verified in tests by
+shuffling merge order).
 """
 
 from __future__ import annotations
@@ -88,6 +102,23 @@ def _update_from_batch(sk, batch: pa.RecordBatch, rows: np.ndarray | None,
             sk.update_values(v if rows is None else v[rows])
 
 
+def _engine_cells(proj: DataFrame, sk, n_hashes: int, keys: list[str]) -> DataFrame:
+    """``(*keys, _cell, _val)``: one row per written sketch cell, aggregated
+    by the sketch's ``engine_agg`` (partial aggregate map-side, final after
+    the shuffle)."""
+    cell, value = sk.engine_cells(*[F.col(f"_h{i}") for i in range(n_hashes)])
+    return (proj.select(*keys, cell.alias("_cell"), value.alias("_val"))
+            .groupBy(*keys, "_cell").agg(sk.engine_agg(F.col("_val")).alias("_val")))
+
+
+def _fill(sk, cells: pa.Table):
+    return sk.fill_cells(cells.column("_cell").to_numpy(), cells.column("_val").to_numpy())
+
+
+def _has_engine(sk, seeds, keyed: bool) -> bool:
+    return seeds is not None and not keyed and hasattr(sk, "engine_cells")
+
+
 def fold_states(states: DataFrame, cls, factory: Callable,
                 tree_depth: int | None = None):
     """Fold a one-binary-column partial-state DataFrame into one sketch:
@@ -120,8 +151,10 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
                  seeds: tuple[int, ...] | None = None, numeric: bool = False,
                  keyed: bool = False, tree_depth: int | None = None,
                  weight_col: str | None = None):
-    """Global sketch over a column. Zero shuffles: partials per scan
-    partition, blobs treeReduce-merged.  ``weight_col`` (numeric sketches
+    """Global sketch over a column.  No shuffle of raw rows: an engine sketch
+    (HLL, CMS) aggregates its cells in the engine and fills the sketch from
+    the ≤ m (or d·w) cell rows; any other sketch builds one partial per
+    scan partition and merges the blobs.  ``weight_col`` (numeric sketches
     only) ships a mass column alongside the value and routes updates
     through the sketch's ``update_weighted``; NULL/non-positive weights
     are filtered at the scan (the kernel drops them too — the pushed
@@ -133,6 +166,9 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
         proj = proj.filter(F.col(weight_col).isNotNull()
                            & (F.col(weight_col).cast("double") > 0))
     proj = proj.select(*_proj_cols(col, seeds, numeric, keyed, weight_col))
+    sk0 = factory(0)
+    if _has_engine(sk0, seeds, keyed):
+        return _fill(sk0, _engine_cells(proj, sk0, len(seeds), []).toArrow())
 
     def fn(batches):
         ctx = TaskContext.get()
@@ -142,7 +178,7 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
         yield pa.RecordBatch.from_pydict({"state": pa.array([sk.to_bytes()], pa.binary())})
 
     states = proj.mapInArrow(fn, _STATE_SCHEMA)
-    return fold_states(states, type(factory(0)), factory, tree_depth)
+    return fold_states(states, type(sk0), factory, tree_depth)
 
 
 def sketch_by_group(df: DataFrame, group_col: str, col: str, factory: Callable, *,
@@ -151,11 +187,15 @@ def sketch_by_group(df: DataFrame, group_col: str, col: str, factory: Callable, 
                     weight_col: str | None = None) -> DataFrame:
     """Per-group sketches with explicit map-side combine.
 
-    Phase 1 builds one sketch per (scan-partition × group) — the skew-robust
-    step: a hot group's rows are combined locally in every partition, so the
-    phase-2 shuffle sees at most ``partitions`` blobs per group no matter how
-    skewed the group is (this is what salting achieves for raw-row shuffles,
-    obtained structurally here).  Phase 2 merges blobs per group.
+    Phase 1 combines each group's rows locally in every scan partition — the
+    skew-robust step: the phase-2 shuffle sees at most ``partitions`` partials
+    per group no matter how skewed the group is (this is what salting
+    achieves for raw-row shuffles, obtained structurally here).  For an
+    engine sketch (HLL, CMS) phase 1 is the partial ``groupBy(group, cell)``
+    aggregate and phase 2 its final aggregate, after which one
+    ``applyInArrow`` per group fills the state from the group's ≤ m (or d·w)
+    cells; for any other sketch phase 1 builds one sketch per
+    (scan-partition × group) and phase 2 merges the blobs per group.
 
     Returns DataFrame ``(group string, state binary)``.
     """
@@ -171,7 +211,18 @@ def sketch_by_group(df: DataFrame, group_col: str, col: str, factory: Callable, 
     proj = proj.select(
         F.col(group_col).cast("string").alias("_g"),
         *_proj_cols(col, seeds, numeric, keyed, weight_col))
-    cls = type(factory(0))
+    sk0 = factory(0)
+    cls = type(sk0)
+    if _has_engine(sk0, seeds, keyed):
+        # no type hints: under postponed annotations applyInArrow cannot
+        # resolve them, and without hints it takes (key, pa.Table) -> pa.Table
+        def assemble(key, cells):
+            return pa.table({"group": pa.array([key[0].as_py()], pa.string()),
+                             "state": pa.array([_fill(factory(0), cells).to_bytes()],
+                                               pa.binary())})
+
+        return (_engine_cells(proj, sk0, len(seeds), ["_g"])
+                .groupBy("_g").applyInArrow(assemble, _GROUP_STATE_SCHEMA))
 
     def partial(batches):
         ctx = TaskContext.get()
@@ -233,7 +284,11 @@ def sketch_cube(df: DataFrame, dims: list[str], col: str, factory: Callable, *,
     (compression is order-dependent, estimates are not materially so).
 
     Same skew-robust shape as :func:`sketch_by_group` (the cube cell is the
-    group): map-side partials per scan partition, one blob shuffle.
+    group): map-side partials per scan partition, and only partials
+    shuffle.  For HLL/CMS the partial is the engine's aggregate of (cube
+    cell, sketch cell) and each cube cell's state is filled from its
+    aggregated sketch cells; for the other sketches it is one blob per
+    (scan partition, cube cell), merged per cube cell.
     Dim values are cast to string in the output; rows with a NULL in any
     dim are dropped (GROUP BY over sketches, same rule as the group path).
     Dim values must not contain U+001F (the internal separator).
