@@ -70,7 +70,9 @@ filters alike.
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import itertools
 import json
 import math
 import os
@@ -79,6 +81,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -567,10 +570,6 @@ _SCATTER_ROWS = 8192      # rows per km_indices + set_bits: bounds the (rows, k)
 _BATCH_BYTES = 64 << 20   # a task's shard blobs leave in batches of about this size
 
 
-def _next_pow2(x: int) -> int:
-    return 1 << max(0, (x - 1).bit_length())
-
-
 def resolve_m0(cfg: BloomConfig, n_shards: int, expected_keys: int | None) -> int:
     """Size the initial level from a cardinality hint so the cascade opens
     few levels (the mergeable analogue of pre-sizing the reference's shards).
@@ -581,7 +580,7 @@ def resolve_m0(cfg: BloomConfig, n_shards: int, expected_keys: int | None) -> in
         return cfg.m0
     copies = 2 if cfg.strict_parity else 1
     per_shard = max(1, expected_keys * copies // n_shards)
-    return max(cfg.m0, _next_pow2(int(per_shard * cfg.threshold)))
+    return max(cfg.m0, 1 << (int(per_shard * cfg.threshold) - 1).bit_length())  # next power of 2
 
 
 def hash_probe_cols(col: str | Column) -> list[Column]:
@@ -622,19 +621,18 @@ def strict_targets(n_shards: int) -> Column:
 
 
 def _insert_ranked(rank: np.ndarray, first: int, m0: int, threshold: float, rehash: bool,
-                   cap_div: int, tier_rows: list[tuple[int, np.ndarray, np.ndarray]],
-                   target) -> None:
+                   tier_rows: list[tuple[int, np.ndarray, np.ndarray]], target) -> None:
     """The one insert kernel: level by rank, then scatter.  Levels
     ``first``, ``first + 1``, ... take the ranks in order, each up to its
-    capacity (the reference's fill threshold, filter.rs:92-118, split
-    ``cap_div`` ways; without rehash ``first`` takes all), and each tier's
-    (t, h1_t, h2_t) rows get their k bits by one chunked scatter per level
-    into ``target(t, idx, rows)``: (flat words, bit offset per row or None)."""
+    capacity (the reference's fill threshold, filter.rs:92-118; without
+    rehash ``first`` takes all), and each tier's (t, h1_t, h2_t) rows get
+    their k bits by one chunked scatter per level into
+    ``target(t, idx, rows)``: (flat words, bit offset per row)."""
     if not rank.size:
         return
-    caps = [max(expected_n(m0 << first, threshold) // cap_div, 1)]
+    caps = [max(expected_n(m0 << first, threshold), 1)]
     while rehash and sum(caps) <= rank.max():
-        caps.append(max(expected_n(m0 << (first + len(caps)), threshold) // cap_div, 1))
+        caps.append(max(expected_n(m0 << (first + len(caps)), threshold), 1))
     pos = np.searchsorted(np.cumsum(caps[:-1]), rank, side="right")
     for p in range(len(caps)):
         rows = np.flatnonzero(pos == p)
@@ -647,48 +645,78 @@ def _insert_ranked(rank: np.ndarray, first: int, m0: int, threshold: float, reha
                 h1, h2 = h1[rows], h2[rows]
             for s in range(0, rows.size, _SCATTER_ROWS):
                 bit = km_indices(h1[s:s + _SCATTER_ROWS], h2[s:s + _SCATTER_ROWS], k, m)
-                set_bits(words, bit if base is None else bit + base[s:s + _SCATTER_ROWS, None])
+                set_bits(words, bit + base[s:s + _SCATTER_ROWS, None])
 
 
-def _insert_arrivals(st: BloomFilterState, sid: int, t: int, h1: np.ndarray, h2: np.ndarray,
-                     cap_div: int = 1) -> None:
+def _insert_arrivals(st: BloomFilterState, sid: int, t: int, h1: np.ndarray,
+                     h2: np.ndarray) -> None:
     """Insert (h1_t, h2_t) rows into tier ``t`` of shard ``sid`` in arrival
     order: ranks continue from the active level's fill, and levels open as
-    ranks reach them (:class:`GroupBloom`; the distributed build sorts
-    first).  A new shard gets level 0 in every tier first."""
-    one = np.array([sid])
-    st._open(one)
+    ranks reach them (:meth:`GroupBloom.update_hashes`; the distributed
+    builds sort first, :func:`_insert_sorted`).  A new shard gets level 0 in
+    every tier first."""
+    st._open(np.array([sid]))
     first = max(idx for idx, tb in st.tables[t].items() if tb.row[sid] >= 0)
-
-    def target(_t, idx, rows):
-        tb = st._grow(t, idx, one)
-        tb.n[sid] += rows.size
-        return tb.words[tb.row[sid]], None
-
     _insert_ranked(int(st.tables[t][first].n[sid]) + np.arange(h1.size), first, st.m0,
-                   st.threshold, st.rehash, cap_div, [(t, h1, h2)], target)
+                   st.threshold, st.rehash, [(t, h1, h2)],
+                   lambda _t, idx, rows: st._place(t, idx, np.full(rows.size, sid)))
 
 
 def _column(batch: pa.RecordBatch, name: str) -> np.ndarray:
     return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
 
 
+def _insert_sorted(st: BloomFilterState, group: np.ndarray, shard: np.ndarray,
+                   tier: np.ndarray | None, h1: np.ndarray, h2: np.ndarray,
+                   count: np.ndarray, last):
+    """The insert step of both distributed builds, over a batch sorted by
+    (group, h1, h2), a group being a shard or a strict shard-tier: adjacent
+    duplicates are dropped, a key's rank in its group picks its level, and
+    one scatter per tier and level index covers the batch.  A row goes to
+    its ``tier`` (strict), else to every tier.  ``count`` (keys per group)
+    and ``last`` (the last row, returned) carry across batches, so the
+    filter is a function of the distinct key set."""
+    keep = np.empty(h1.size, dtype=bool)
+    keep[0] = last != (group[0], h1[0], h2[0])
+    keep[1:] = (group[1:] != group[:-1]) | (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
+    last = (group[-1], h1[-1], h2[-1])
+    h1, h2, shard, group = h1[keep], h2[keep], shard[keep], group[keep]
+    if not group.size:
+        return last
+    starts = np.flatnonzero(np.concatenate(([True], group[1:] != group[:-1])))
+    runs = np.diff(np.append(starts, group.size))
+    rank = np.arange(group.size) - np.repeat(starts - count[group[starts]], runs)
+    count[group[starts]] += runs
+    parts = ([(np.flatnonzero(tier[keep] == t), [t]) for t in range(st.tiers)]
+             if tier is not None else [(slice(None), range(st.tiers))])
+    for sel, ts in parts:
+        _insert_ranked(rank[sel], 0, st.m0, st.threshold, st.rehash,
+                       [(t, *tier_hashes(h1[sel], h2[sel], t)) for t in ts],
+                       lambda t, idx, r, s=shard[sel]: st._place(t, idx, s[r]))
+    return last
+
+
+def _blob_batches(rows, schema: dict):
+    """Rows (tuples that end in a blob) as Arrow batches of the ``schema``
+    columns (name → type), cut where the blobs pass ``_BATCH_BYTES``."""
+    chunk, size = [], 0
+    for row in itertools.chain(rows, [None]):
+        if row is not None:
+            chunk.append(row)
+            size += len(row[-1])
+        if chunk and (row is None or size >= _BATCH_BYTES):
+            yield pa.RecordBatch.from_arrays(list(map(pa.array, zip(*chunk), schema.values())),
+                                             names=list(schema))
+            chunk, size = [], 0
+
+
 def _shard_batches(st: BloomFilterState):
-    """A task's shards as single-shard blobs, in one Arrow batch unless the
-    blobs pass ``_BATCH_BYTES`` (a binary column holds < 2 GiB)."""
-    header, entries = st._header(1), list(st._entries())
+    """A task's shards as single-shard blobs (:func:`_blob_batches`)."""
+    header = st._header(1)
     keys = sum(tb.n for tb in st.tables[0].values())  # the rows column: tier-0 keys
-    sids, rows, blobs, size = [], [], [], 0
-    for i, (sid, entry) in enumerate(entries):
-        sids.append(sid)
-        rows.append(int(keys[sid]))
-        blobs.append(b"".join([header, *entry]))
-        size += len(blobs[-1])
-        if i == len(entries) - 1 or size >= _BATCH_BYTES:
-            yield pa.RecordBatch.from_pydict({"shard": pa.array(sids, pa.int32()),
-                                              "rows": pa.array(rows, pa.int64()),
-                                              "state": pa.array(blobs, pa.binary())})
-            sids, rows, blobs, size = [], [], [], 0
+    return _blob_batches(((sid, int(keys[sid]), b"".join([header, *entry]))
+                          for sid, entry in st._entries()),
+                         {"shard": pa.int32(), "rows": pa.int64(), "state": pa.binary()})
 
 
 def _digest(blob: bytes) -> str:
@@ -720,11 +748,8 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
                         completed: frozenset[int]):
     """The build kernel over a task's rows sorted by (shard, h1, h2); strict
     rows are the (shard, tier) insert targets (``_skshard``/``_sktier``),
-    sorted by (shard, tier, h1, h2).  Adjacent duplicate (h1, h2) pairs are
-    dropped (a key's bits are a function of them), each key's rank within
-    its shard(-tier) picks its level, and one scatter per tier and level
-    index covers every shard of the batch.  Ranks and the last pair carry
-    across batches, so the filter is a function of the distinct key set."""
+    sorted by (shard, tier, h1, h2).  Every batch goes through
+    :func:`_insert_sorted` into the task's one filter."""
     tiers, strict = cfg.tiers, cfg.strict_parity
 
     def fn(batches):
@@ -751,24 +776,8 @@ def _build_partition_fn(cfg: BloomConfig, n_shards: int, m0: int,
                 group = shard * tiers + tier
             else:
                 shard = group = derive_shard(h1, n_shards)
-            keep = np.empty(h1.size, dtype=bool)
-            keep[0] = last != (group[0], h1[0], h2[0])
-            keep[1:] = (group[1:] != group[:-1]) | (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
-            last = (group[-1], h1[-1], h2[-1])
-            h1, h2, shard, group = h1[keep], h2[keep], shard[keep], group[keep]
-            if not group.size:
-                continue
-            starts = np.flatnonzero(np.concatenate(([True], group[1:] != group[:-1])))
-            runs = np.diff(np.append(starts, group.size))
-            rank = np.arange(group.size) - np.repeat(starts - count[group[starts]], runs)
-            count[group[starts]] += runs
-            # strict rows carry one tier each; default rows go to every tier
-            parts = ([(np.flatnonzero(tier[keep] == t), [t]) for t in range(tiers)] if strict
-                     else [(slice(None), range(tiers))])
-            for sel, ts in parts:
-                _insert_ranked(rank[sel], 0, m0, cfg.threshold, cfg.rehash, 1,
-                               [(t, *tier_hashes(h1[sel], h2[sel], t)) for t in ts],
-                               lambda t, idx, r, s=shard[sel]: st._place(t, idx, s[r]))
+                tier = None
+            last = _insert_sorted(st, group, shard, tier, h1, h2, count, last)
         st._open(st._shard_ids())  # strict: a shard may get no key of some tier
         if checkpoint_dir:
             _write_checkpoint(checkpoint_dir, pid, st, nrows, fingerprint)
@@ -961,19 +970,22 @@ def with_membership(df: DataFrame, col: str, state: BloomFilterState,
 
 def _broadcast_cached(spark, value, deserialize):
     """Ship ``value`` once and return ``load()``, which gives
-    ``deserialize(value)`` on a worker, decoded once per cache slot (keyed
-    by a driver-side sequence — Broadcast has no ``.id`` in PySpark 4).
-    The one cache of every broadcast probe."""
+    ``deserialize(value)`` on a worker, decoded once per Python worker
+    (:func:`_worker_cached`).  The one cache of every broadcast probe."""
     bc = spark.sparkContext.broadcast(value)
     _BC_SEQ[0] += 1
-    bc_key = _BC_SEQ[0]
+    return functools.partial(_worker_cached, _BC_SEQ[0], bc, deserialize)
 
-    def load():
-        if _BC_CACHE[0] != bc_key:
-            _BC_CACHE[:] = [bc_key, deserialize(bc.value)]
-        return _BC_CACHE[1]
 
-    return load
+def _worker_cached(bc_key: int, bc, deserialize):
+    """Decoded ``bc`` from the worker's single slot, keyed by a driver-side
+    sequence (Broadcast has no ``.id`` in PySpark 4).  Module level, so
+    cloudpickle ships it by reference and it reads the worker's own
+    ``_BC_CACHE``; a closure would ship a copy of the slot with each task."""
+    if _BC_CACHE[0] != bc_key:
+        _BC_CACHE[:] = [None, None]  # free the old filter before decoding the new one
+        _BC_CACHE[:] = [bc_key, deserialize(bc.value)]
+    return _BC_CACHE[1]
 
 
 def broadcast_probe_udf(spark, blob: bytes, deserialize):
@@ -1030,24 +1042,15 @@ def with_group_membership(df: DataFrame, group_col: str, col: str, states,
     (mirroring :func:`~sparksketch.similarity.knn_join`'s ``max_queries``):
     a million-group build would OOM the driver/broadcast — beyond the gate
     the distributed :func:`membership_join` path is the answer."""
-    spark = df.sparkSession
     if isinstance(states, DataFrame):
-        rows = states.select("group", "state").limit(max_groups + 1).collect()
-        if len(rows) > max_groups:
-            raise ValueError(
-                f"with_group_membership broadcasts the (group -> blob) map; "
-                f"got >{max_groups} groups - use the distributed "
-                f"membership_join path for group cardinalities this large, "
-                f"or raise max_groups explicitly if the blobs are known-small")
-        blobs = {r.group: bytes(r.state) for r in rows}
-    else:
-        if len(states) > max_groups:
-            raise ValueError(
-                f"with_group_membership broadcasts the (group -> blob) map; "
-                f"got {len(states)} groups > max_groups={max_groups} - use "
-                f"membership_join for group cardinalities this large")
-        blobs = {g: bytes(b) for g, b in states.items()}
-    load = _broadcast_cached(spark, blobs, _decode_group_states)
+        states = dict(states.select("group", "state").limit(max_groups + 1).collect())
+    if len(states) > max_groups:
+        raise ValueError(
+            f"with_group_membership broadcasts the (group -> blob) map; got more than "
+            f"max_groups={max_groups} groups - use membership_join for group cardinalities "
+            f"this large, or raise max_groups if the blobs are known-small")
+    blobs = {g: bytes(b) for g, b in states.items()}
+    load = _broadcast_cached(df.sparkSession, blobs, _decode_group_states)
 
     @F.pandas_udf("boolean")
     def probe(g, ha, hb):
@@ -1112,12 +1115,8 @@ def membership_join(probes: DataFrame, col: str, states: DataFrame,
     # once (a row-id + re-join design would evaluate it twice, and
     # monotonically_increasing_id is not stable across re-evaluations of a
     # shuffled plan, silently mislabelling rows)
-    hashed = probes.select("*", *hcols).withColumn(
-        _ROUTE, F.pmod(F.col("_skh_a"), F.lit(n_shards).cast("long")))
-    # shard states may be partial (several rows per shard from separate
-    # builds); pre-merge them per shard so the join side is one row/shard.
-    merged = states.groupBy("shard").applyInPandas(_merge_state_rows, "shard int, state binary")
-    joined = hashed.join(merged, hashed[_ROUTE] == merged["shard"], "left")
+    hashed = probes.select("*", *hcols).withColumn(_ROUTE, route_expr(n_shards))
+    joined = _join_shard_blobs(hashed, states)
 
     def check(batches):
         for batch in batches:
@@ -1154,8 +1153,7 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
                 .select("_skh_a", "_skh_b",
                         F.col("_tgt.t").alias("_sktier"),
                         F.col("_tgt.s").alias(_ROUTE)))
-    merged = states.groupBy("shard").applyInPandas(_merge_state_rows, "shard int, state binary")
-    joined = exploded.join(merged, exploded[_ROUTE] == merged["shard"], "left")
+    joined = _join_shard_blobs(exploded, states)
 
     def check(batches):
         for batch in batches:
@@ -1181,25 +1179,23 @@ def _membership_join_strict(probes: DataFrame, states: DataFrame, tiers: int,
             .select(*probe_cols, F.coalesce(F.col(out), F.lit(False)).alias(out)))
 
 
+def _join_shard_blobs(probes: DataFrame, states: DataFrame) -> DataFrame:
+    """``probes`` left-joined to the list of their shard's state blobs
+    (several rows per shard when states are partial)."""
+    blobs = states.groupBy("shard").agg(F.collect_list("state").alias("state"))
+    return probes.join(blobs, probes[_ROUTE] == blobs["shard"], "left")
+
+
 def _joined_state(batch: pa.RecordBatch) -> BloomFilterState | None:
-    """The filter of the distinct shard blobs in a batch of probe rows
-    joined to their shard states (all rows of a shard carry the same
-    blob), or None if no row found a state.  Rows whose shard it lacks
-    probe False."""
-    blobs = batch.column("state")
-    valid = np.flatnonzero(pa.compute.is_valid(blobs).to_numpy(zero_copy_only=False))
+    """The filter of the distinct shards' blob lists in a batch of probe
+    rows joined to them (:func:`_join_shard_blobs`), or None if no row found a
+    state.  Rows whose shard it lacks probe False."""
+    lists = batch.column("state")
+    valid = np.flatnonzero(pc.is_valid(lists).to_numpy(zero_copy_only=False))
     if not valid.size:
         return None
     _, first = np.unique(_column(batch, _ROUTE)[valid], return_index=True)
-    return BloomFilterState.from_blobs(blobs.take(valid[first]).to_pylist())
-
-
-def _merge_state_rows(pdf):
-    """One shard's state rows → one row: the blobs folded by one
-    :meth:`~BloomFilterState.from_blobs`, serialised once."""
-    import pandas as pd
-    st = BloomFilterState.from_blobs(bytes(b) for b in pdf["state"])
-    return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "state": [st.to_bytes()]})
+    return BloomFilterState.from_blobs(pc.list_flatten(lists.take(valid[first])).to_pylist())
 
 
 # ====================================================================
@@ -1207,77 +1203,76 @@ def _merge_state_rows(pdf):
 # ====================================================================
 
 class GroupBloom:
-    """A single-shard cascading filter as a mergeable group sketch — plugs
-    the Bloom cascade into :func:`sparksketch.sketch.sketch_by_group` so
-    per-lang / per-host filters come out of the same map-side-combine
-    pattern as the other sketches.  Shard routing is pointless inside a
-    group sketch (the group IS the shard), so n_shards = 1."""
+    """A single-shard cascading filter (``state``) built in memory by
+    arrival-order inserts (:meth:`update_hashes`).  A :func:`bloom_by_group`
+    blob decodes with :meth:`BloomFilterState.from_bytes`."""
 
-    def __init__(self, cfg: BloomConfig | None = None, m0: int | None = None,
-                 cap_div: int = 1):
-        self.cfg = cfg or BloomConfig()
-        if self.cfg.strict_parity:
-            # strict mode's 2-shards-per-tier placement needs n_shards >= 4;
-            # a single-shard group sketch cannot satisfy it — fail loudly
-            # rather than silently dropping the user's explicit config
-            raise ValueError("strict_parity is incompatible with per-group "
-                             "filters (single-shard); use build_bloom for "
-                             "reference-parity filters")
-        m0 = m0 or self.cfg.m0
-        self.cap_div = cap_div
-        self.state = BloomFilterState(self.cfg.tiers, 1, m0, self.cfg.threshold, self.cfg.rehash)
-        self.state._open(np.zeros(1, dtype=np.int64))
+    def __init__(self, cfg: BloomConfig | None = None, m0: int | None = None):
+        cfg = cfg or BloomConfig()
+        _refuse_strict_groups(cfg)
+        self.state = BloomFilterState(cfg.tiers, 1, m0 or cfg.m0, cfg.threshold, cfg.rehash)
 
     def update_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
         for t, (a, b) in enumerate(derive_tier_hashes(h1, h2, self.state.tiers)):
-            _insert_arrivals(self.state, 0, t, a, b, self.cap_div)
+            _insert_arrivals(self.state, 0, t, a, b)
 
-    def merge(self, other: "GroupBloom") -> "GroupBloom":
-        self.state.merge(other.state)
-        return self
 
-    def to_bytes(self) -> bytes:
-        return self.state.to_bytes()
+def _refuse_strict_groups(cfg: BloomConfig) -> None:
+    if cfg.strict_parity:  # its 2 shards per tier need n_shards >= 4
+        raise ValueError("strict_parity is incompatible with per-group "
+                         "filters (single-shard); use build_bloom for "
+                         "reference-parity filters")
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "GroupBloom":
-        g = cls.__new__(cls)
-        g.state = BloomFilterState.from_bytes(data)
-        g.cfg = None
-        g.cap_div = 1
-        return g
 
-    def contains(self, key: str | bytes) -> bool:
-        return self.state.contains(key)  # same 2-base-hash derivation path
+def _group_partition_fn(cfg: BloomConfig, m0: int):
+    """The per-group build kernel over a task's rows sorted by (group, h1,
+    h2): each group's run, which may span batches, fills a fresh 1-shard
+    filter (:func:`_insert_sorted`), emitted when the run ends."""
 
-    def key_count(self) -> int:
-        return self.state.key_count
+    def runs(batches):
+        name = st = count = last = None
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            g = batch.column("_g")
+            h1, h2 = _column(batch, "_skh_a"), _column(batch, "_skh_b")
+            starts = [0, *(np.flatnonzero(pc.not_equal(g[1:], g[:-1]).to_numpy(
+                zero_copy_only=False)) + 1).tolist()]
+            for lo, hi, grp in zip(starts, [*starts[1:], batch.num_rows],
+                                   g.take(starts).to_pylist()):
+                if grp != name:  # never None: null groups are dropped
+                    if st is not None:
+                        yield name, st.to_bytes()
+                    name, st = grp, BloomFilterState(cfg.tiers, 1, m0, cfg.threshold, cfg.rehash)
+                    count, last = np.zeros(1, dtype=np.int64), None
+                one = np.zeros(hi - lo, dtype=np.int64)  # the rank group and the shard
+                last = _insert_sorted(st, one, one, None, h1[lo:hi], h2[lo:hi], count, last)
+        if st is not None:
+            yield name, st.to_bytes()
+
+    return lambda batches: _blob_batches(runs(batches), {"group": pa.string(),
+                                                         "state": pa.binary()})
 
 
 def bloom_by_group(df: DataFrame, group_col: str, col: str,
                    cfg: BloomConfig = BloomConfig(),
                    expected_keys_per_group: int | None = None) -> DataFrame:
-    """Per-group Bloom filters → DataFrame (group, state binary).
+    """Per-group Bloom filters → DataFrame (group string, state binary).
 
-    Uses the generic two-phase group-sketch pattern (per-partition partials
-    → per-group merge), which is skew-robust by construction: a hot group
-    produces at most one partial per partition regardless of its row count.
-    Level capacities are split across partitions (scan-local accounting)."""
-    from sparksketch import sketch as _sk
-    if cfg.strict_parity:
-        # validate on the driver: the GroupBloom factory runs inside executor
-        # tasks, where the same error would surface as an opaque task failure
-        raise ValueError("strict_parity is incompatible with per-group "
-                         "filters (single-shard); use build_bloom for "
-                         "reference-parity filters")
-    spark = df.sparkSession
-    cap_div = max(spark.sparkContext.defaultParallelism, 1)
-    m0 = None
-    if expected_keys_per_group:
-        m0 = max(cfg.m0, _next_pow2(int(expected_keys_per_group * cfg.threshold)))
-    seeds = (HASH_SEED_SELECTION[0], HASH_SEED_SELECTION[1])
-    return _sk.sketch_by_group(df, group_col, col,
-                               lambda pid: GroupBloom(cfg, m0, cap_div), seeds=seeds)
+    Built like :func:`build_bloom_states` with the group as the shard:
+    (group, h1, h2) rows without a null group or key shuffle on the group
+    and sort, and one kernel per task builds its groups
+    (:func:`_group_partition_fn`).  A group's filter is a function of its
+    distinct keys: the bytes of ``build_bloom(<its rows>, col, cfg,
+    n_shards=1, expected_keys=expected_keys_per_group,
+    enforce_key_limit=False)``.  A hot group's rows all go through one task."""
+    _refuse_strict_groups(cfg)
+    m0 = resolve_m0(cfg, 1, expected_keys_per_group)
+    rows = (df.filter(F.col(group_col).isNotNull() & F.col(col).isNotNull())
+            .select(F.col(group_col).cast("string").alias("_g"),
+                    *hash_probe_cols(F.col(col).cast("string"))))
+    routed = rows.repartition("_g").sortWithinPartitions("_g", "_skh_a", "_skh_b")
+    return routed.mapInArrow(_group_partition_fn(cfg, m0), "group string, state binary")
 
 
 def compact_bloom(df: DataFrame, col: str, state: BloomFilterState,

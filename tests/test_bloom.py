@@ -26,6 +26,7 @@ from sparksketch.bloom import (
     merge_blobs,
     resolve_m0,
     route_expr,
+    with_group_membership,
     with_membership,
 )
 from sparksketch.config import Accuracy, BloomConfig, InitialCapacity, Throughput, expected_n, optimal_k
@@ -608,6 +609,36 @@ def test_probe_decoders_pickle_by_reference(spark, monkeypatch):
     for decode, blob in shipped:
         assert cloudpickle.loads(cloudpickle.dumps(decode)) is decode
         assert decode(blob).to_bytes() == blob
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_broadcast_filter_decoded_once_per_worker(spark, monkeypatch, tmp_path, grouped):
+    """with_membership and with_group_membership decode the broadcast
+    filter once per Python worker, not once per task: a probe over 12
+    partitions, run twice, logs each decode's worker pid, and no worker
+    decodes twice."""
+    from sparksketch import bloom
+
+    log = tmp_path / "decodes"
+    name = "_decode_group_states" if grouped else "_decode_state"
+    decode = getattr(bloom, name)
+
+    def counting(blob):
+        import os
+        with open(log, "a") as f:
+            f.write(f"{os.getpid()}\n")
+        return decode(blob)
+
+    monkeypatch.setattr(bloom, name, counting)
+    df = spark.range(0, 12_000, 1, 12).select(F.col("id").cast("string").alias("key"),
+                                             F.lit("g").alias("g"))
+    state = build_bloom(df, "key", BloomConfig(), n_shards=4, partitions=2)
+    probed = (with_group_membership(df, "g", "key", {"g": state.to_bytes()}) if grouped
+              else with_membership(df, "key", state))
+    for _ in range(2):
+        assert probed.agg(F.sum(F.col("is_member").cast("int"))).first()[0] == 12_000
+    pids = log.read_text().split()
+    assert pids and len(pids) == len(set(pids))
 
 
 # ---------------- strict parity (2 shards per tier) ----------------

@@ -4,7 +4,7 @@ abstraction (Iceberg-or-parquet)."""
 import pytest
 from pyspark.sql import functions as F
 
-from sparksketch.bloom import GroupBloom, bloom_by_group
+from sparksketch.bloom import BloomFilterState, bloom_by_group, build_bloom, with_group_membership
 from sparksketch.cms import CMS, cms_by_group
 from sparksketch.config import BloomConfig
 from sparksketch.sources import input_fingerprint, is_table_identifier, load_table
@@ -16,7 +16,7 @@ def test_bloom_by_group_zero_fn(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
     states = bloom_by_group(docs, "source", "text", BloomConfig(),
                             expected_keys_per_group=200)
-    filters = {r.group: GroupBloom.from_bytes(bytes(r.state)) for r in states.collect()}
+    filters = {r.group: BloomFilterState.from_bytes(bytes(r.state)) for r in states.collect()}
     sample = docs.select("source", "text").limit(300).collect()
     for r in sample:
         assert filters[r.source].contains(r.text), r.source  # zero FN per group
@@ -27,7 +27,7 @@ def test_bloom_by_group_zero_fn(spark):
     # key counts add up
     counts = {r.source: r["count"] for r in docs.groupBy("source").count().collect()}
     for g, f in filters.items():
-        assert f.key_count() == counts[g]
+        assert f.key_count == counts[g]
 
 
 def test_with_group_membership_distributed(spark):
@@ -71,6 +71,63 @@ def test_with_group_membership_group_cardinality_gate(spark):
     ok = with_group_membership(docs.select("source", "text"), "source", "text",
                                states, max_groups=n_groups)
     assert ok.filter(~F.col("is_member")).count() == 0
+
+
+def _group_blobs(df, expected):
+    states = bloom_by_group(df, "g", "key", BloomConfig(), expected_keys_per_group=expected)
+    return {r.group: bytes(r.state) for r in states.collect()}
+
+
+@pytest.fixture(scope="module")
+def grouped(spark):
+    """12k distinct keys in three groups of 9000, 2000 and 1000 keys, with
+    small Arrow batches so group runs span batches; built with
+    expected_keys_per_group=500, so every group opens levels >= 1."""
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "700")
+    df = spark.range(12_000).select(
+        F.when(F.col("id") < 9000, "big").when(F.col("id") < 11_000, "mid")
+        .otherwise("small").alias("g"),
+        F.concat(F.lit("k"), F.col("id")).alias("key")).cache()
+    try:
+        yield df, _group_blobs(df, 500)
+    finally:
+        df.unpersist()
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+def test_bloom_by_group_ignores_order_partitioning_and_duplicates(grouped):
+    df, base = grouped
+    assert set(base) == {"big", "mid", "small"}
+    for variant in (df.orderBy(F.rand(1)), df.repartition(3), df.union(df.orderBy(F.rand(2)))):
+        assert _group_blobs(variant, 500) == base
+
+
+def test_bloom_by_group_equals_one_shard_build(grouped):
+    """Each group's blob is the 1-shard build_bloom blob over its rows, and
+    key_count counts its distinct keys, in multi-level groups too."""
+    df, base = grouped
+    sizes = {"big": 9000, "mid": 2000, "small": 1000}
+    for g, blob in base.items():
+        want = build_bloom(df.filter(F.col("g") == g), "key", BloomConfig(), n_shards=1,
+                           expected_keys=500, enforce_key_limit=False)
+        assert blob == want.to_bytes(), g
+        state = BloomFilterState.from_bytes(blob)
+        assert state.key_count == sizes[g]
+        assert all(len(tier) > 1 for tier in state.shards[0])  # levels >= 1 opened
+
+
+def test_bloom_by_group_drops_null_groups_and_keys(spark, grouped):
+    df, base = grouped
+    extra = spark.createDataFrame([(None, "k1"), (None, "nokey"), ("small", None), ("nulls", None)],
+                                  "g string, key string")
+    assert _group_blobs(df.union(extra), 500) == base
+
+
+def test_with_group_membership_multi_level_zero_fn(grouped):
+    df, base = grouped
+    flagged = with_group_membership(df, "g", "key", base)
+    assert flagged.filter(~F.col("is_member")).count() == 0
 
 
 def test_cms_by_group_exact_small_groups(spark):
